@@ -494,12 +494,13 @@ object Dedup {
     * — the step a training pipeline runs after pair generation (keep one
     * doc per cluster, drop the rest). Iterative min-label contraction:
     * each round relabels edges, derives the min-neighbor parent forest
-    * (strictly decreasing → acyclic) and FULLY compresses it with the
-    * pointer-doubling fixpoint (GraphOps.forestRoots), so label chains
-    * collapse logarithmically instead of one hop per round. Only
-    * (label, label) pairs ever shuffle; nothing is collected to the
-    * driver. Docs in no pair are singletons (their own canonical) and
-    * are omitted from the output. */
+    * (strictly decreasing → acyclic) and FULLY compresses it with
+    * GraphOps.forestRoots, so label chains collapse in one round instead
+    * of one hop per round. Only (label, label) pairs ever shuffle; a
+    * round's parent forest of up to 3,000,000 labels resolves in one
+    * driver pass, a larger one in the shuffle fixpoint. Docs in no pair
+    * are singletons (their own canonical) and are omitted from the
+    * output. */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 15): DataFrame = {
     // checkpointFresh (stats firewall) everywhere in this loop: labels
     // round N feeds round N+1's joins, and a plain localCheckpoint

@@ -730,8 +730,8 @@ object Multimodal {
     * pair streams feed ONE connected-components contraction
     * (Dedup.dupClusters), so a text chain and an image chain that touch
     * merge into one group with one canonical keeper. Edge streams stay
-    * narrow (id, id) pairs; the contraction is the same log-round
-    * pointer-doubling machinery every dedup family already shares. */
+    * narrow (id, id) pairs; the contraction is the same min-label
+    * machinery every dedup family already shares. */
   def multimodalClusters(s: SparkSession, dir: String): DataFrame = {
     // exact-dup-first contraction on BOTH modalities: the text relation
     // is the star + rep-pair edge set (same components as the full

@@ -83,7 +83,7 @@ object QueryLayer {
       msgHash: String): DataFrame =
     messages.filter(col("msg_hash") === msgHash)
       .select(col("tx_hash").as("hash"), col("tx_lt").as("lt"))
-      .join(txs, Seq("hash"))
+      .join(txs, Seq("hash", "lt"))
       .orderBy("lt", "hash")
 
   /** adjacentTransactions (J2): the self-join neighbor hop. */

@@ -60,7 +60,7 @@ object ChainSim {
   def chainRootsPublic(spark: SparkSession, dir: String): DataFrame =
     chainRoots(spark, dir)
   def b15SimPublic(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    protocolSim(spark, dir, b15Opcodes, b15Bodies)
+    protocolSim(spark, dir, b15Opcodes, Some(b15Bodies))
   def b15WalletDimPublic(spark: SparkSession, dir: String): DataFrame =
     b15WalletDim(spark, dir)
 
@@ -251,7 +251,7 @@ object ChainSim {
     * error → DNS change-record 0x4eb1f0f9 (change_dns). */
   private def protocolSim(spark: SparkSession, dir: String,
       opcodeOf: Column,
-      bodyOf: Column = null): (DataFrame, DataFrame) = {
+      bodyOf: Option[Column] = None): (DataFrame, DataFrame) = {
     val ev0 = chainedEvents(spark, dir).withColumn("pos",
       row_number().over(Window.partitionBy("user_id").orderBy("event_id")))
     // BODIED variants: spread the BOC-synthesis stage explicitly. AQE
@@ -263,10 +263,10 @@ object ChainSim {
     // sized to the cluster in a deployment — an explicit N is exempt
     // from AQE coalescing). Body-less variants skip the exchange.
     val ev =
-      if (bodyOf == null) ev0
+      if (bodyOf.isEmpty) ev0
       else ev0.repartition(
         spark.sessionState.conf.numShufflePartitions, col("event_id"))
-    val body = if (bodyOf == null) lit(null).cast("string") else bodyOf
+    val body = bodyOf.getOrElse(lit(null).cast("string"))
     val txs = ev0.select(
       concat(lit("T"), col("event_id").cast("string")).as("hash"),
       col("acct").as("account"),
@@ -348,9 +348,9 @@ object ChainSim {
 
   private def protocolClassified(spark: SparkSession, dir: String,
       variant: String, opcodeOf: => Column,
-      // null (not a null LITERAL column) = body-less variant — the
-      // distinction drives protocolSim's bodied-stage repartition
-      bodyOf: => Column = null,
+      // None = body-less variant: drives protocolSim's bodied-stage
+      // repartition
+      bodyOf: => Option[Column] = None,
       dims: => graft.classifier.ClassifyDims = graft.classifier.ClassifyDims(),
       keep: Seq[String] = Nil,
       persistMsgs: Boolean = false): DataFrame =
@@ -582,7 +582,7 @@ object ChainSim {
       |  FROM segext)
       |SELECT * FROM typed WHERE type IS NOT NULL
       |ORDER BY start_lt, type""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b10", b10Opcodes, b10Bodies)
+    protocolClassified(s, dir, "b10", b10Opcodes, Some(b10Bodies))
       .select(col("trace_id"), col("type"), col("start_lt"), col("end_lt"),
         col("success"))
       .orderBy("start_lt", "type")
@@ -659,7 +659,7 @@ object ChainSim {
       |  CASE WHEN nviews > 1 THEN nviews ELSE 0 END AS n_hops
       |FROM runs WHERE head_type = 'click'
       |ORDER BY start_lt""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b11", b11Opcodes, b11Bodies,
+    protocolClassified(s, dir, "b11", b11Opcodes, Some(b11Bodies),
       keep = Seq("jetton_swap_data"))
       .filter(col("type") === "jetton_swap")
       .select(col("trace_id"), col("start_lt"), col("end_lt"),
@@ -688,7 +688,7 @@ object ChainSim {
       |  ON s.user_id = r.user_id AND s.seg_id = r.seg_id
       |WHERE r.head_type = 'click' AND r.nviews > 1 AND s.event_type = 'view'
       |ORDER BY swap_lt, hop""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b11", b11Opcodes, b11Bodies,
+    protocolClassified(s, dir, "b11", b11Opcodes, Some(b11Bodies),
       keep = Seq("jetton_swap_data"))
       .filter(col("type") === "jetton_swap")
       .select(col("trace_id"), col("start_lt").as("swap_lt"),
@@ -817,7 +817,7 @@ object ChainSim {
       |FROM ext
       |WHERE NOT (event_type = 'view' AND head_type = 'click')
       |ORDER BY start_lt, type""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b13", b13Opcodes, b13Bodies,
+    protocolClassified(s, dir, "b13", b13Opcodes, Some(b13Bodies),
       keep = Seq("multisig_approve_data", "multisig_execute_data",
         "change_dns_record_data", "vesting_add_whitelist_data"))
       .select(col("trace_id"), col("start_lt"), col("type"),
@@ -919,7 +919,7 @@ object ChainSim {
       |FROM ext
       |WHERE NOT (event_type = 'error' AND head_type = 'signup')
       |ORDER BY start_lt, type""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b14", b14Opcodes, b14Bodies,
+    protocolClassified(s, dir, "b14", b14Opcodes, Some(b14Bodies),
       keep = Seq("multisig_create_order_data", "destination_secondary"))
       .select(col("trace_id"), col("start_lt"), col("type"),
         col("multisig_create_order_data.query_id").as("query_id"),
@@ -953,7 +953,7 @@ object ChainSim {
     * over its message bodies. */
   private[graft] def b15Corpus(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) =
-    protocolSim(spark, dir, b15Opcodes, b15Bodies)
+    protocolSim(spark, dir, b15Opcodes, Some(b15Bodies))
 
   private def b15Wallet(userId: Long): String = "0:" + f"$userId%064X"
   private def b15Master(userId: Long): String =
@@ -1037,7 +1037,7 @@ object ChainSim {
       |  event_id AS amount_out
       |FROM views WHERE nv >= 2
       |ORDER BY swap_lt, hop""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b15", b15Opcodes, b15Bodies,
+    protocolClassified(s, dir, "b15", b15Opcodes, Some(b15Bodies),
       graft.classifier.ClassifyDims(jettonWallets = Some(b15WalletDim(s, dir))),
       keep = Seq("jetton_swap_data"), persistMsgs = true)
       .filter(col("type") === "jetton_swap")
@@ -1298,7 +1298,7 @@ object ChainSim {
       |       END AS new_secret_hash
       |FROM base
       |ORDER BY start_lt""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b17", b17Opcodes, b17Bodies,
+    protocolClassified(s, dir, "b17", b17Opcodes, Some(b17Bodies),
       keep = Seq("cocoon_proxy_charge_data", "cocoon_unregister_proxy_data",
         "cocoon_client_increase_stake_data",
         "cocoon_client_change_secret_hash_data", "cocoon_proxy_payout_data"))
@@ -1412,7 +1412,7 @@ object ChainSim {
       |    ELSE concat('0:', user_id) END AS source
       |FROM agg WHERE n = 5
       |ORDER BY start_lt""".stripMargin) { (s, dir) =>
-    protocolClassified(s, dir, "b18", b18Opcodes, b18Bodies,
+    protocolClassified(s, dir, "b18", b18Opcodes, Some(b18Bodies),
       keep = Seq("layerzero_dvn_verify_data"))
       .filter(col("type") === "layerzero_dvn_verify")
       .select(col("trace_id"), col("start_lt"), col("end_lt"),

@@ -1,22 +1,25 @@
 package graft.plans
 
 import graft.{Q, Tables => T}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.GraftFreshStats.{checkpointFresh, unpersistCheckpoints}
 import org.apache.spark.sql.functions._
 
-/** Distributed forest root-propagation — the batch form of the reference's
+import scala.collection.immutable.ArraySeq
+
+/** Forest root resolution — the batch form of the reference's
   * incremental trace assembly (connected components over the message
   * graph, ton-index-worker/tondb-scanner/src/TraceAssembler.cpp:285-412).
   *
   * Because every transaction has exactly one in-edge, the message graph is
-  * a forest: connected component id == root id, and root propagation by
-  * pointer doubling converges in O(log depth) self-joins instead of
-  * O(depth). Each iteration halves the pointer distance to the root; with
-  * `localCheckpoint` truncating lineage, the plan stays constant-size.
-  * At 100 TB this is shuffle-bound on the (id, anc) join — both sides are
-  * hash-partitioned on the join key each round, and AQE handles the
-  * shrinking frontier.
+  * a forest: connected component id == root id. Forests up to
+  * [[DriverResolveLimit]] nodes resolve in ONE driver pass: the (id,
+  * parent) table is collected once — the same rows a broadcast jump table
+  * would pull through the driver in every round — and every root is found
+  * by an iterative walk with path compression, O(nodes) in total. Larger
+  * forests use the shuffle fixpoint: pointer doubling over (id, anc)
+  * self-joins, O(log depth) rounds, each hash-partitioned on the join key
+  * under AQE, with `checkpointFresh` truncating lineage between rounds.
   */
 object GraphOps {
 
@@ -41,43 +44,108 @@ object GraphOps {
     out
   }
 
-  /** nodes: (id, parent) with parent null for roots (or absent ids treated
-    * as roots). Returns (id, root).
-    *
-    * Physical shape per round: TWO pointer hops through the round-start
-    * jump table (ancestor distance grows 3^k per round vs 2^k — fewer
-    * materialization/convergence jobs for the same join count), and the
-    * jump table is broadcast when the node set is small enough (an
-    * (id, anc) pair table broadcasts comfortably into the millions of
-    * rows; past the threshold the joins fall back to the shuffle path —
-    * the 100 TB shape, hash-partitioned on the join key under AQE). */
-  def forestRoots(nodes: DataFrame, maxIters: Int = 30): DataFrame = {
-    // anc = current known ancestor (self for roots); done = anc is a root
-    var cur = checkpointFresh(nodes
-      .select(col("id"), coalesce(col("parent"), col("id")).as("anc")))
-    val useBroadcast = cur.count() <= 3000000L
-    // hops per round through the round-start jump table: ancestor distance
-    // grows ×(hops+1) per round. Under a broadcast jump table extra hops
-    // are nearly free (one more broadcast hash join in the same codegen
-    // pipeline), so go wide — depth 10⁴ converges in 4 rounds at ×9.
-    // 16 hops was tried in r16 and measured SLOWER (7.6 vs 5.9 s on the
-    // depth-99 bench chain: the longer codegen pipeline costs more than
-    // the round it saves), so 8 stays. On the shuffle path (the 100 TB
-    // shape) each hop is a shuffle join, so stay at 2 hops (×3) —
-    // fewer, cheaper rounds dominate there.
-    val hops = if (useBroadcast) 8 else 2
+  /** Forests up to this many nodes resolve on the driver; larger ones
+    * take the shuffle fixpoint. */
+  val DriverResolveLimit = 3000000
+
+  /** nodes: (id, parent). A null or self parent makes the node a root; a
+    * parent that is not an id is itself the root. Returns (id, root).
+    * Fails on a cycle and on a duplicate id. `maxIters` bounds the
+    * shuffle fixpoint's rounds. */
+  def forestRoots(nodes: DataFrame, maxIters: Int = 30): DataFrame =
+    forestRoots(nodes, maxIters, DriverResolveLimit)
+
+  /** `driverLimit` only moves the branch boundary, so specs can drive
+    * small forests through the shuffle fixpoint. */
+  private[graft] def forestRoots(nodes: DataFrame, maxIters: Int,
+      driverLimit: Int): DataFrame = {
+    // anc = current known ancestor (self for roots)
+    val pairs = nodes
+      .select(col("id"), coalesce(col("parent"), col("id")).as("anc"))
+    val local = pairs.limit(driverLimit + 1).collect()
+    if (local.length <= driverLimit) resolveOnDriver(pairs, local)
+    else shuffleRoots(pairs, maxIters)
+  }
+
+  /** One pass over the collected (id, anc) rows: walk each unresolved
+    * node up to a resolved node or a root, then give every node on the
+    * walk that root, so each node is walked once. The result is spread
+    * over the shuffle parallelism for the joins that consume it. */
+  private def resolveOnDriver(pairs: DataFrame, rows: Array[Row]): DataFrame = {
+    val n = rows.length
+    val index = new java.util.HashMap[Any, Integer](math.max(16, n * 2))
+    for (i <- 0 until n) {
+      val id = rows(i).get(0)
+      require(index.put(id, i) == null, s"forestRoots: duplicate id $id")
+    }
+    // up(i): the node that i's anc names, or -1 when i is a root (anc is
+    // i itself, or not an id at all — then anc is the root)
+    val up = Array.tabulate(n) { i =>
+      val p = index.get(rows(i).get(1))
+      if (p == null || p.intValue == i) -1 else p.intValue
+    }
+    val root = new Array[Any](n)
+    // walk stamp: 0 unvisited, s + 1 on the walk from s, -1 resolved
+    val stamp = new Array[Int](n)
+    val path = new Array[Int](n)
+    for (s <- 0 until n if stamp(s) == 0) {
+      var len = 0
+      var x = s
+      var r: Any = null
+      var walking = true
+      while (walking) {
+        if (stamp(x) == -1) { r = root(x); walking = false }
+        else {
+          require(stamp(x) != s + 1,
+            s"forestRoots did not converge: id ${rows(x).get(0)} is on a cycle")
+          stamp(x) = s + 1
+          path(len) = x
+          len += 1
+          if (up(x) < 0) { r = rows(x).get(1); walking = false }
+          else x = up(x)
+        }
+      }
+      while (len > 0) {
+        len -= 1
+        root(path(len)) = r
+        stamp(path(len)) = -1
+      }
+    }
+    val out = Array.tabulate(n)(i => Row(rows(i).get(0), root(i)))
+    val spark = pairs.sparkSession
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(ArraySeq.unsafeWrapArray(out),
+        spark.sessionState.conf.numShufflePartitions),
+      pairs.withColumnRenamed("anc", "root").schema)
+  }
+
+  /** Pointer doubling over (id, anc) self-joins, for forests past the
+    * driver limit. Physical shape per round: TWO pointer hops through the
+    * round-start jump table, so ancestor distance grows ×3 per round; each
+    * hop is a shuffle join, and fewer, cheaper rounds dominate here. */
+  private def shuffleRoots(pairs: DataFrame, maxIters: Int): DataFrame = {
+    val isRoot = col("anc") === col("id")
+    var cur = checkpointFresh(pairs)
+    // one pass for the duplicate-id check and the count of roots
+    val start = cur.groupBy("id")
+      .agg(count(lit(1)).as("n"), count(when(isRoot, 1)).as("roots"))
+      .agg(count(when(col("n") > 1, 1)),
+        min(when(col("n") > 1, col("id"))).cast("string"),
+        coalesce(sum("roots"), lit(0L)))
+      .head()
+    require(start.getLong(0) == 0, s"forestRoots: duplicate id " +
+      s"${start.getString(1)} (${start.getLong(0)} ids are duplicated)")
+    val hops = 2
+    var selfRooted = 0L
     var iter = 0
     var converged = false
     while (!converged && iter < maxIters) {
-      val jt0 = cur.select(col("id").as("anc"), col("anc").as("anc2"))
-      val jt = if (useBroadcast) broadcast(jt0) else jt0
+      val jt = cur.select(col("id").as("anc"), col("anc").as("anc2"))
       // anc0 tracks the value BEFORE THE FINAL HOP, not the round start:
       // the final hop moves nothing ⟺ every anc was already a root when
       // it ran (jt(x) = x only for roots), which is the fixpoint — so
       // convergence is detected IN the round that finishes the work
-      // instead of costing one extra full no-op round (r16; with ×9
-      // rounds and depth ~100 that extra round was 1/4 of every
-      // forestRoots call — chain/event roots, every dupClusters round).
+      // instead of costing one extra full no-op round.
       var hopped = cur.select(col("id"), col("anc").as("anc0"), col("anc"))
       for (i <- 1 to hops)
         hopped = hopped
@@ -89,16 +157,18 @@ object GraphOps {
       // truncates the plan but FORWARDS the computed stats
       // (LogicalRDD.originStats), and Catalyst's size-only stats visitor
       // multiplies join children's sizeInBytes — so the estimate
-      // compounds ×9 per 8-hop round, bits(round N) ≈ 9^N × 63, and
-      // with an outer loop nesting forestRoots calls (d14 dupClusters)
-      // the driver ends up in Toom-Cook multiplications on
-      // million-digit numbers for HOURS before any task runs (observed
-      // live at sf1). The firewall drops originStats so each round
-      // plans from the default size; the jump-table broadcast is an
-      // explicit hint and AQE re-plans shuffles from runtime sizes.
+      // compounds round over round, and with an outer loop nesting
+      // forestRoots calls (d14 dupClusters) the driver ends up in
+      // Toom-Cook multiplications on million-digit numbers for HOURS
+      // before any task runs (observed live at sf1). The firewall drops
+      // originStats so each round plans from the default size, and AQE
+      // re-plans shuffles from runtime sizes.
       val stepped = checkpointFresh(hopped
         .withColumn("moved", col("anc") =!= col("anc0")))
-      val changed = stepped.filter(col("moved")).count()
+      val counts = stepped
+        .agg(count(when(col("moved"), 1)), count(when(isRoot, 1))).head()
+      val changed = counts.getLong(0)
+      selfRooted = counts.getLong(1)
       // release the superseded round's blocks: stepped is already
       // materialized, so cur's checkpoint can never be read again.
       // Without this every round of every fixpoint in a session stays
@@ -110,6 +180,10 @@ object GraphOps {
       converged = changed == 0
     }
     require(converged, s"forestRoots did not converge in $maxIters iterations")
+    // a cycle whose length divides 3^rounds passes the fixpoint test with
+    // its nodes rooted at themselves; in a forest only the roots are
+    require(selfRooted == start.getLong(2),
+      "forestRoots did not converge: the parent pointers have a cycle")
     cur.select(col("id"), col("anc").as("root"))
   }
 

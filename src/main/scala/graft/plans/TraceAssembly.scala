@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
   * graph is a forest; the incremental pending-edge map of the reference
   * collapses, in batch, into: (1) one msg_hash equi-join matching each
   * transaction's in-message to its producer transaction, (2) forest root
-  * propagation (GraphOps.forestRoots, O(log depth) rounds), (3) one
-  * aggregation for trace metadata. Edge semantics preserved:
+  * resolution (GraphOps.forestRoots), (3) one aggregation for trace
+  * metadata. Edge semantics preserved:
   *  - null source            → 'ext'  edge, starts a trace (root tx)
   *  - system address source  → 'sys'  edge, starts a trace
   *    (TraceAssembler.cpp:305 short-circuit)
@@ -25,8 +25,11 @@ import org.apache.spark.sql.functions._
   *  - tx with no in-message → its own trace root (TraceAssembler.cpp:381-387)
   *
   * Scale: both joins shuffle on msg_hash / tx hash (uniform 256-bit keys,
-  * no skew); nothing is collected to the driver. At 100 TB the input
-  * would be mc_seqno-bucketed and assembly run per closed bucket range.
+  * no skew). Forests up to GraphOps.DriverResolveLimit (3,000,000)
+  * transactions resolve their roots in one driver pass over the collected
+  * (id, parent) table; larger ones use the shuffle fixpoint, O(log depth)
+  * rounds with nothing collected. At 100 TB the input would be
+  * mc_seqno-bucketed and assembly run per closed bucket range.
   */
 object TraceAssembly {
 

@@ -10,8 +10,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * keeps its size estimates. For a driver loop that feeds each round's
   * checkpoint into the next round's joins this is a trap:
   * `SizeInBytesOnlyStatsPlanVisitor.visitJoin` MULTIPLIES child sizes,
-  * so the carried `sizeInBytes` compounds round over round — an 8-hop
-  * self-join round raises the bit-width ×9, and with nested loops
+  * so the carried `sizeInBytes` compounds round over round — a k-hop
+  * self-join round raises the bit-width ×(k+1), and with nested loops
   * (dupClusters calling forestRoots per round) the estimate reaches
   * millions of digits within ~10 rounds. Planning then pins the driver
   * in `BigInteger.multiplyToomCook3` for HOURS before a single task

@@ -67,12 +67,17 @@ class FreshStatsSpec extends SparkSpec {
     // one 4096-deep chain: pointer doubling needs multiple rounds
     val chain = (1 to 4096).map(i =>
       (s"N$i", if (i == 1) null else s"N${i - 1}")).toDF("id", "parent")
-    val roots = graft.plans.GraphOps.forestRoots(chain)
-    assert(roots.filter(col("root") =!= "N1").count() == 0)
-    // the returned plan must not embed compounded estimates: a projection
-    // over the final fresh checkpoint stays within one default-size factor
     val defaultSize = BigInt(spark.sessionState.conf.defaultSizeInBytes)
-    assert(sizeOf(roots) <= defaultSize,
-      s"forestRoots returned a plan with compounded stats: ${sizeOf(roots)}")
+    // both branches: the one-pass resolve and (driver limit 0) the
+    // shuffle fixpoint
+    for (limit <- Seq(graft.plans.GraphOps.DriverResolveLimit, 0)) {
+      val roots = graft.plans.GraphOps.forestRoots(chain, 30, limit)
+      assert(roots.filter(col("root") =!= "N1").count() == 0)
+      // the returned plan must not embed compounded estimates: it stays
+      // within one default-size factor
+      assert(sizeOf(roots) <= defaultSize,
+        s"forestRoots (driver limit $limit) returned a plan with " +
+          s"compounded stats: ${sizeOf(roots)}")
+    }
   }
 }

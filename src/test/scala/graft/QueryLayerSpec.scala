@@ -158,6 +158,22 @@ class QueryLayerSpec extends SparkSpec {
     assert(adj.toSeq == Seq("T1", "T3"))
   }
 
+  test("transactionsByMessage joins on (hash, lt) and orders by lt") {
+    import spark.implicits._
+    val msgs = Seq(
+      ("m1", "T1", 10L, "out"), ("m1", "T2", 11L, "in"),
+      ("m2", "T2", 11L, "out"))
+      .toDF("msg_hash", "tx_hash", "tx_lt", "direction")
+    // T2 at lt 99 shares the hash but not the message's tx_lt
+    val txs = Seq(("T2", 11L, "0:b"), ("T1", 10L, "0:a"), ("T2", 99L, "0:b"),
+      ("T3", 12L, "0:c")).toDF("hash", "lt", "account")
+    val got = QueryLayer.transactionsByMessage(txs, msgs, "m1")
+    assert(got.columns.count(_ == "lt") == 1)
+    assert(got.collect().map(r => (r.getAs[String]("hash"),
+      r.getAs[Long]("lt"), r.getAs[String]("account"))).toSeq ==
+      Seq(("T1", 10L, "0:a"), ("T2", 11L, "0:b")))
+  }
+
   // ------------------------------------------------ token/dim families
 
   test("jettonWallets: mintless coalesce, zero-balance exclusion, sort contract") {
