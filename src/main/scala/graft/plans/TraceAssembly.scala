@@ -9,22 +9,29 @@ import org.apache.spark.sql.functions._
   *
   * Because every transaction consumes exactly one in-message, the message
   * graph is a forest; the incremental pending-edge map of the reference
-  * collapses, in batch, into: (1) one msg_hash equi-join matching each
-  * transaction's in-message to its producer transaction, (2) forest root
-  * resolution (GraphOps.forestRoots), (3) one aggregation for trace
-  * metadata. Edge semantics preserved:
+  * collapses, in batch, into: (1) one FULL OUTER msg_hash equi-join of
+  * in- against out-messages, which classifies every edge at once (a
+  * matched or in-only row is a consumed in-message, an out-only row is a
+  * dangling out-message), (2) forest root resolution
+  * (GraphOps.forestRoots) over the resolved ord edges, (3) one roots
+  * join per edge, on its owner tx (the consumer of an in-edge, the
+  * producer of a pending edge), (4) two aggregations and one join for
+  * trace metadata. Edge semantics preserved:
   *  - null source            → 'ext'  edge, starts a trace (root tx)
   *  - system address source  → 'sys'  edge, starts a trace
   *    (TraceAssembler.cpp:305 short-circuit)
-  *  - internal, producer found   → 'ord' edge inside the trace
+  *  - internal, producer found   → 'ord' edge inside the trace (one row
+  *    per consumer: an out-message consumed twice gives two edges)
   *  - internal, producer missing → broken edge: trace state 'broken'
   *    (TraceAssembler.cpp:316-325 — the closed-input batch analogue of
-  *    "pending past the backtrack window")
+  *    "pending past the backtrack window"); a null msg_hash never
+  *    matches, so such an in-message is broken too
   *  - out-message never consumed (non-null destination) → pending edge:
-  *    state 'pending' unless already broken
+  *    state 'pending' unless already broken; a null destination (log
+  *    message) makes no edge
   *  - tx with no in-message → its own trace root (TraceAssembler.cpp:381-387)
   *
-  * Scale: both joins shuffle on msg_hash / tx hash (uniform 256-bit keys,
+  * Scale: the joins shuffle on msg_hash / tx hash (uniform 256-bit keys,
   * no skew). Forests up to GraphOps.DriverResolveLimit (3,000,000)
   * transactions resolve their roots in one driver pass over the collected
   * (id, parent) table; larger ones use the shuffle fixpoint, O(log depth)
@@ -54,22 +61,31 @@ object TraceAssembly {
       .select(col("msg_hash"), col("tx_hash").as("parent_tx"),
         col("destination"))
 
-    // one row per consumed in-message, annotated with its producer (if any)
-    val inEdges = inMsgs
-      .join(outMsgs.select("msg_hash", "parent_tx"), Seq("msg_hash"), "left")
-      .withColumn("edge_type",
-        when(col("source").isNull, "ext")
-          .when(col("source") === SystemAddress, "sys")
-          .otherwise("ord"))
-      .withColumn("broken",
-        col("edge_type") === "ord" && col("parent_tx").isNull)
+    // every edge from one full outer join on msg_hash: a row with an
+    // in-side is a consumed in-message (its producer, if any, alongside);
+    // a row without one is an out-message nobody consumed, a pending edge
+    // unless it has no destination (a log message, no edge). The edge's
+    // owner is the tx whose trace it belongs to: the consumer of an
+    // in-edge, the producer of a pending edge. Every message belongs to a
+    // tx, so a non-null child_tx marks the rows with an in-side.
+    val isIn = col("child_tx").isNotNull
+    val edgeType = when(!isIn, "ord").when(col("source").isNull, "ext")
+      .when(col("source") === SystemAddress, "sys").otherwise("ord")
+    val classified = inMsgs.join(outMsgs, Seq("msg_hash"), "full_outer")
+      .filter(isIn || col("destination").isNotNull)
+      .select(col("msg_hash"), col("parent_tx").as("left_tx"),
+        col("child_tx").as("right_tx"), edgeType.as("edge_type"),
+        (!isIn).as("incomplete"),
+        (isIn && edgeType === "ord" && col("parent_tx").isNull).as("broken"),
+        when(isIn, col("child_tx")).otherwise(col("parent_tx")).as("owner_tx"))
 
-    // forest: parent pointer only along resolved ord edges
+    // forest: parent pointer only along resolved ord in-edges
     val roots = precomputedRoots.getOrElse {
       val nodes = txs.select(col("hash").as("id"))
-        .join(inEdges
-          .filter(col("edge_type") === "ord" && !col("broken"))
-          .select(col("child_tx").as("id"), col("parent_tx").as("parent")),
+        .join(classified
+          .filter(col("edge_type") === "ord" && !col("incomplete") &&
+            !col("broken"))
+          .select(col("right_tx").as("id"), col("left_tx").as("parent")),
           Seq("id"), "left")
       GraphOps.forestRoots(nodes)
         .select(col("id").as("hash"), col("root").as("trace_id"))
@@ -77,27 +93,12 @@ object TraceAssembly {
 
     val txsWithTrace = txs.join(roots, Seq("hash"))
 
-    // resolved + broken in-edges, tagged with the child's trace
-    val edges = inEdges
-      .join(roots.select(col("hash").as("child_tx"), col("trace_id")),
-        Seq("child_tx"), "left")
-      .select(col("trace_id"), col("msg_hash"),
-        col("parent_tx").as("left_tx"), col("child_tx").as("right_tx"),
-        col("edge_type"), lit(false).as("incomplete"), col("broken"))
-
-    // dangling out-messages (consumer not in input, real destination):
-    // the reference's pending-edge map at end-of-batch
-    val pendingEdges = outMsgs
-      .join(inMsgs.select("msg_hash"), Seq("msg_hash"), "left_anti")
-      .filter(col("destination").isNotNull)
-      .join(roots.select(col("hash").as("parent_tx"), col("trace_id")),
-        Seq("parent_tx"), "left")
-      .select(col("trace_id"), col("msg_hash"),
-        col("parent_tx").as("left_tx"), lit(null).cast("string").as("right_tx"),
-        lit("ord").as("edge_type"), lit(true).as("incomplete"),
-        lit(false).as("broken"))
-
-    val traceEdges = edges.unionByName(pendingEdges)
+    // each edge joins roots once, on its owner tx
+    val traceEdges = classified
+      .join(roots.select(col("hash").as("owner_tx"), col("trace_id")),
+        Seq("owner_tx"), "left")
+      .select(col("trace_id"), col("msg_hash"), col("left_tx"),
+        col("right_tx"), col("edge_type"), col("incomplete"), col("broken"))
 
     val traces = traceSummaries(txsWithTrace, traceEdges)
 
@@ -107,16 +108,16 @@ object TraceAssembly {
   /** Trace summary rows from an (already materialized) txsWithTrace and
     * the edge set — split out so a silver-layer caller can derive the
     * traces table from the PERSISTED txsWithTrace instead of re-executing
-    * the assembly joins a second time. */
+    * the assembly joins a second time. Two aggregates (tx bounds; edge
+    * counts with the root's external in-message hash folded in) and one
+    * join. */
   def traceSummaries(txsWithTrace: DataFrame, traceEdges: DataFrame): DataFrame = {
     val edgeStats = traceEdges.groupBy("trace_id").agg(
       sum(when(!col("incomplete") && !col("broken"), 1L).otherwise(0L)).as("edges_"),
       sum(when(col("incomplete"), 1L).otherwise(0L)).as("pending_edges_"),
-      max(when(col("broken"), 1).otherwise(0)).as("any_broken"))
-    val extHash = traceEdges
-      .filter(col("edge_type") === "ext" && col("right_tx") === col("trace_id"))
-      .groupBy("trace_id")
-      .agg(min("msg_hash").as("external_hash"))
+      max(when(col("broken"), 1).otherwise(0)).as("any_broken"),
+      min(when(col("edge_type") === "ext" && col("right_tx") === col("trace_id"),
+        col("msg_hash"))).as("external_hash"))
     txsWithTrace.groupBy("trace_id").agg(
         count(lit(1)).as("nodes_"),
         min("lt").as("start_lt"), max("lt").as("end_lt"),
@@ -124,7 +125,6 @@ object TraceAssembly {
         min("mc_block_seqno").as("mc_seqno_start"),
         max("mc_block_seqno").as("mc_seqno_end"))
       .join(edgeStats, Seq("trace_id"), "left")
-      .join(extHash, Seq("trace_id"), "left")
       .withColumn("edges_", coalesce(col("edges_"), lit(0L)))
       .withColumn("pending_edges_", coalesce(col("pending_edges_"), lit(0L)))
       .withColumn("state",

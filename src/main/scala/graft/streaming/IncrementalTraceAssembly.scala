@@ -17,6 +17,12 @@ import org.apache.spark.sql.functions._
   * assembler (identical semantics by construction — T5's exactly-once
   * equivalence), emits traces that completed, and carries the rest.
   *
+  * One micro-batch materializes five frames: the unioned txs and msgs,
+  * the traces, and the txs and msgs tagged with their trace's `complete`
+  * flag. The completed traces, their txs and msgs, and the carried open
+  * set are filters over those five, so a batch pays five materializations
+  * however its output is split.
+  *
   * The open set is bounded by in-flight trace size, not by history —
   * the reference bounds the same state with its 50-block backtrack.
   * State snapshots go to `checkpointDir` as parquet (the .tastate
@@ -30,20 +36,15 @@ class IncrementalTraceAssembly(spark: SparkSession,
   private var openTxs: Option[DataFrame] = None
   private var openMsgs: Option[DataFrame] = None
   private var lastBatchId: Option[Long] = None
-  @volatile var completedCount: Long = 0L
 
-  // checkpoints created by the PREVIOUS batch. They stay readable until
-  // the next batch's inputs are materialized, then they are unreachable
-  // and their blocks are released. Without this rotation a long-running
-  // stream pins every batch's working set in the block store for the
-  // life of the session. The RETURNED frames (done/doneTxs/doneMsgs) are
-  // checkpointed too — self-contained, no lineage into this internal
-  // state — and rotate through `returnedState` with one extra batch of
-  // lag, so a caller holding batch N's results can still read them while
-  // (and after) batch N+1 is processed; they die when batch N+2 starts.
-  private var staleState: Seq[DataFrame] = Nil
-  private var returnedState: Seq[DataFrame] = Nil
-  private var returnedStale: Seq[DataFrame] = Nil
+  // the traces and tagged checkpoints of the last two batches, newest
+  // first. Batch N's three back both the open set carried into batch N+1
+  // and the frames returned to batch N's caller, so they are released
+  // only once batch N+2's inputs are materialized. The rest of a batch's
+  // working set is released as soon as the batch ends. Without this
+  // rotation a long-running stream pins every batch's working set in the
+  // block store for the life of the session.
+  private var live: List[Seq[DataFrame]] = Nil
 
   private def unionOpt(a: Option[DataFrame], b: DataFrame): DataFrame =
     a.map(_.unionByName(b)).getOrElse(b)
@@ -75,11 +76,12 @@ class IncrementalTraceAssembly(spark: SparkSession,
     * to get batch-keyed snapshots (replay-safe); batchId = -1 keeps the
     * legacy unkeyed snapshot behavior.
     *
-    * Lifetime contract: the returned frames are eagerly materialized
-    * (local checkpoints with no lineage into the rotating internal
-    * state) and remain readable while the NEXT batch is processed; they
-    * are released when the batch after that starts. Persist them (write
-    * or your own checkpoint) if you need them beyond that window. */
+    * Lifetime contract: the returned frames are filters over this batch's
+    * local checkpoints (no lineage into earlier batches or into the input
+    * frames). They remain readable while the NEXT batch is processed and
+    * are released when the batch after that starts (batch N's frames die
+    * once batch N+2's inputs are materialized). Persist them (write or
+    * your own checkpoint) if you need them beyond that window. */
   def processBatchFull(txs: DataFrame, msgs: DataFrame, batchId: Long = -1L)
       : (DataFrame, DataFrame, DataFrame) = {
     if (batchId >= 0L) seekTo(batchId)
@@ -91,73 +93,55 @@ class IncrementalTraceAssembly(spark: SparkSession,
       .dropDuplicates("hash"))
     val allMsgs = checkpointFresh(unionOpt(openMsgs, msgs)
       .dropDuplicates("msg_hash", "tx_hash", "direction"))
-    // this batch's inputs are materialized: the previous batch's
-    // internal checkpoints (working set + carried open state) are now
-    // dead; the frames RETURNED two batches ago die with them
-    staleState.foreach(unpersistCheckpoints)
-    returnedStale.foreach(unpersistCheckpoints)
+    // this batch's inputs are materialized: the batch before the previous
+    // one is now dead, both its carried state and its returned frames
+    live.drop(1).foreach(_.foreach(unpersistCheckpoints))
+    live = live.take(1)
 
     val (traces, _, txsWithTrace) = assemble(allTxs, allMsgs)
     val tracesC = checkpointFresh(traces)
-    val txsWithTraceC = checkpointFresh(txsWithTrace)
+    val complete = col("complete")
+    // every tx has exactly one trace, so the inner joins keep every tx and
+    // every message of a tx (a message with no tx is neither done nor open)
+    val taggedTxs = checkpointFresh(txsWithTrace
+      .join(tracesC.select(col("trace_id"),
+        (col("state") === "complete").as("complete")), Seq("trace_id"))
+      .select((txsWithTrace.columns.map(col) :+ complete): _*))
+    val taggedMsgs = checkpointFresh(allMsgs
+      .join(taggedTxs.select(col("hash").as("tx_hash"), complete),
+        Seq("tx_hash"))
+      .select((allMsgs.columns.map(col) :+ complete): _*))
 
-    // returned frames are materialized (no lineage into rotated state)
-    val done = checkpointFresh(tracesC.filter(col("state") === "complete"))
-    val open = tracesC.filter(col("state") =!= "complete")
-      .select(col("trace_id"))
-
-    val doneTxs = checkpointFresh(txsWithTraceC
-      .join(done.select("trace_id"), Seq("trace_id"), "left_semi"))
-    val doneMsgs = checkpointFresh(allMsgs.join(
-      doneTxs.select(col("hash").as("tx_hash")), Seq("tx_hash"), "left_semi"))
-
+    val done = tracesC.filter(col("state") === "complete")
+    val doneTxs = taggedTxs.filter(complete).drop("complete")
+    val doneMsgs = taggedMsgs.filter(complete).drop("complete")
     // carry only rows belonging to still-open traces
-    val openTxKeys = checkpointFresh(txsWithTraceC
-      .join(open, Seq("trace_id"), "left_semi"))
-    openTxs = Some(openTxKeys.drop("trace_id"))
-    openMsgs = Some(checkpointFresh(allMsgs.join(
-      openTxKeys.select(col("hash").as("tx_hash")), Seq("tx_hash"),
-      "left_semi")))
+    val carryTxs = taggedTxs.filter(!complete).drop("complete", "trace_id")
+    val carryMsgs = taggedMsgs.filter(!complete).drop("complete")
+    openTxs = Some(carryTxs)
+    openMsgs = Some(carryMsgs)
 
-    completedCount += done.count()
     if (batchId >= 0L) {
       checkpointDir.foreach { dir =>
-        snapshot(s"$dir/batches/$batchId")
+        snapshot(s"$dir/batches/$batchId", carryTxs, carryMsgs)
         prune(dir, batchId)
       }
       lastBatchId = Some(batchId)
-    } else checkpointDir.foreach(snapshot)
-    // internal checkpoints rotate out at the next batch; the raw
-    // (pre-checkpoint) traces/txsWithTrace frames are included so the
-    // assembler's internal fixpoint state is released too. Returned
-    // frames rotate with one extra batch of lag (see returnedState).
-    staleState = Seq(allTxs, allMsgs, tracesC, txsWithTraceC,
-      openTxKeys, traces, txsWithTrace) ++ openMsgs
-    returnedStale = returnedState
-    returnedState = Seq(done, doneTxs, doneMsgs)
+    } else checkpointDir.foreach(snapshot(_, carryTxs, carryMsgs))
+    // nothing reads the unioned inputs or the assembler's frames once the
+    // tagged checkpoints exist; releasing traces/txsWithTrace also frees
+    // the assembler's internal fixpoint checkpoints (if any)
+    Seq(allTxs, allMsgs, traces, txsWithTrace).foreach(unpersistCheckpoints)
+    live = Seq(tracesC, taggedTxs, taggedMsgs) :: live
     (done, doneTxs, doneMsgs)
   }
 
   /** Persist the open working set (the .tastate analogue). Batch-keyed
     * dirs mirror the reference's per-seqno state files
     * (TraceAssembler.cpp:53-128, keep-last-100 GC). */
-  private def snapshot(dir: String): Unit = {
-    openTxs.getOrElse(emptyLike("open_txs"))
-      .write.mode("overwrite").parquet(s"$dir/open_txs")
-    openMsgs.getOrElse(emptyLike("open_msgs"))
-      .write.mode("overwrite").parquet(s"$dir/open_msgs")
-  }
-
-  private def emptyLike(which: String): DataFrame = {
-    // an empty open set still needs a readable snapshot; schemas match the
-    // stream-input projection (StreamPipeline.inputSchema split)
-    val fields = if (which == "open_txs")
-      StreamPipeline.inputSchema.fields.take(12)
-    else StreamPipeline.inputSchema.fields.takeRight(10) :+
-      org.apache.spark.sql.types.StructField("tx_hash",
-        org.apache.spark.sql.types.StringType)
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(fields))
+  private def snapshot(dir: String, txs: DataFrame, msgs: DataFrame): Unit = {
+    txs.write.mode("overwrite").parquet(s"$dir/open_txs")
+    msgs.write.mode("overwrite").parquet(s"$dir/open_msgs")
   }
 
   /** Keep the last 100 batch snapshots (the reference's GC policy). */

@@ -15,13 +15,19 @@ object StreamOps {
   case class StateUpdate(account: String, last_trans_lt: Long, balance: Long)
 
   /** readStream over a parquet directory with an explicit schema —
-    * streaming never infers schemas (§1.3). */
+    * streaming never infers schemas (§1.3).
+    *
+    * Admission is by bytes: each micro-batch takes input files, in arrival
+    * order, while their total size stays within `maxBytesPerTrigger`, and
+    * always takes at least one file. A 1-byte budget therefore runs one
+    * file per micro-batch, which specs use to pin batch boundaries; the
+    * chain ingest passes StreamPipeline.MaxBatchBytes (the T4 mapping). */
   def fileStream(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
-      maxFilesPerTrigger: Int = 1): DataFrame =
+      maxBytesPerTrigger: Long): DataFrame =
     spark.readStream
       .schema(schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger) // T4 backpressure
+      .option("maxBytesPerTrigger", maxBytesPerTrigger)
       .parquet(dir)
 
   /** S4 in STORAGE: a silver-maintaining sink that keeps an on-disk

@@ -41,12 +41,18 @@ class StreamingScaleSpec extends SparkSpec {
       }
     }
 
+    // one chunk per micro-batch (1-byte budget), so the open set is
+    // carried in memory within a run and through the snapshot across runs
+    def run(): Unit = {
+      val q = StreamPipeline.runAvailable(spark, inDir, ckDir, outDir, 1L)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    }
     // phase 1: two chunks, then "crash" (the run loop exits)
     shipChunk(0); shipChunk(1)
-    StreamPipeline.runAvailable(spark, inDir, ckDir, outDir)
+    run()
     // phase 2: restart from the checkpoint with the rest
     shipChunk(2); shipChunk(3)
-    StreamPipeline.runAvailable(spark, inDir, ckDir, outDir)
+    run()
 
     val key = Seq("trace_id", "action_id", "type", "start_lt")
     val streamed = spark.read.parquet(s"$outDir/actions")

@@ -61,8 +61,8 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("returned frames from batch N stay readable after batch N+1 runs") {
-    // lifetime contract: processBatchFull's results are materialized
-    // with no lineage into the rotating internal state, so a caller that
+    // lifetime contract: processBatchFull's results read only batch N's
+    // own checkpoints, which outlive batch N+1, so a caller that
     // holds batch N's frames and only reads them after submitting batch
     // N+1 (e.g. a sink that flushes one batch behind) must not hit
     // unpersisted-checkpoint block-fetch failures.
@@ -87,6 +87,41 @@ class StreamingSpec extends SparkSpec {
     assert(doneTxs3.count() == 1 && doneMsgs3.count() == 1)
     // batch 2's frames survive batch 3 too (rolling window, not one-off)
     assert(done2.count() == 1)
+  }
+
+  test("one steady-state micro-batch of the assembler stays within its job budget") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val inc = new IncrementalTraceAssembly(spark)
+    // batch 1 leaves T1's trace open (m2 unconsumed), so batch 2 unions
+    // a carried open set with new rows, the steady state of a stream
+    inc.processBatchFull(
+      txDf("T1" -> 10L),
+      msgDf(("m1", "T1", "in", null, "0:T1"), ("m2", "T1", "out", "0:T1", "0:T2")))
+    val txs2 = txDf("T2" -> 20L, "T3" -> 30L)
+    val msgs2 = msgDf(("m2", "T2", "in", "0:T1", "0:T2"),
+      ("m3", "T3", "in", null, "0:T3"), ("m4", "T3", "out", "0:T3", "0:T4"))
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    sc.addSparkListener(listener)
+    val (done, doneTxs, _) = try {
+      val r = inc.processBatchFull(txs2, msgs2)
+      ListenerBusDrain(sc)
+      r
+    } finally sc.removeSparkListener(listener)
+    // 31 measured on this fixture (five materializations per batch)
+    assert(jobs.get() <= 31,
+      s"one micro-batch ran ${jobs.get()} jobs: per-batch materializations are back")
+    assert(done.collect().map(_.getAs[String]("trace_id")).toSeq == Seq("T1"))
+    assert(doneTxs.collect().map(_.getAs[String]("hash")).toSet == Set("T1", "T2"))
+    assert(inc.openTraces().collect().map(_.getAs[String]("trace_id")).toSeq ==
+      Seq("T3"))
   }
 
   test("incremental assembly snapshots and restores its open set") {
@@ -116,8 +151,8 @@ class StreamingSpec extends SparkSpec {
         schema).coalesce(1).write.mode("append").parquet(srcDir)
     write(0, Seq(("A", 5L, "T5"), ("B", 1L, "T1"), ("A", 9L, "T9")))
     write(1, Seq(("A", 7L, "T7"), ("C", 2L, "T2"))) // A stale: must lose
-    // first run: two batches (maxFilesPerTrigger=1 → one file per batch)
-    val stream = StreamOps.fileStream(spark, srcDir, schema)
+    // first run: two batches (a 1-byte budget → one file per batch)
+    val stream = StreamOps.fileStream(spark, srcDir, schema, 1L)
     val q = StreamOps.latestStateSilverSink(stream, outDir, ckDir, keep = 2)
     q.awaitTermination()
     val afterTwo = StreamOps.latestStateSilver(spark, outDir).collect()
@@ -126,7 +161,7 @@ class StreamingSpec extends SparkSpec {
     // restart with new data: state comes from the silver files
     write(2, Seq(("B", 8L, "T8"), ("D", 3L, "T3")))
     val q2 = StreamOps.latestStateSilverSink(
-      StreamOps.fileStream(spark, srcDir, schema), outDir, ckDir, keep = 2)
+      StreamOps.fileStream(spark, srcDir, schema, 1L), outDir, ckDir, keep = 2)
     q2.awaitTermination()
     val fin = StreamOps.latestStateSilver(spark, outDir).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
@@ -211,7 +246,7 @@ class StreamingSpec extends SparkSpec {
     val schema = StructType(Seq(
       StructField("hash", StringType), StructField("account", StringType),
       StructField("finality", StringType)))
-    // two arrival waves -> two micro-batches (maxFilesPerTrigger = 1)
+    // two arrival waves -> two micro-batches (one file per batch)
     val wave1 = Seq(
       Row("T1", "0:A", "finalized"), Row("T2", "0:B", "finalized"),
       Row("T3", "0:A", "pending"))
@@ -227,7 +262,7 @@ class StreamingSpec extends SparkSpec {
       Subscriber("a_pending", "pending", Seq("0:A")),
       Subscriber("a_confirmed", "confirmed", Seq("0:A")))
     val q = StreamOps.subscriptionFanout(
-      StreamOps.fileStream(spark, inDir, schema),
+      StreamOps.fileStream(spark, inDir, schema, 1L),
       subs, s"$tmp/ck", s"$tmp/out")
     q.awaitTermination()
 
@@ -241,7 +276,7 @@ class StreamingSpec extends SparkSpec {
     // a restarted query re-reads nothing (offsets committed) and the
     // sinks stay stable — the idempotence contract of the batch-keyed dirs
     val q2 = StreamOps.subscriptionFanout(
-      StreamOps.fileStream(spark, inDir, schema),
+      StreamOps.fileStream(spark, inDir, schema, 1L),
       subs, s"$tmp/ck", s"$tmp/out")
     q2.awaitTermination()
     assert(sink("all_finalized") == Set("T1", "T2", "T5"))
@@ -281,12 +316,18 @@ class StreamingSpec extends SparkSpec {
       }
     }
 
+    // one chunk per micro-batch (1-byte budget), so the open set is
+    // carried in memory within a run and through the snapshot across runs
+    def run(): Unit = {
+      val q = StreamPipeline.runAvailable(spark, inDir, ckDir, outDir, 1L)
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+    }
     // phase 1: first two chunks, then "crash" (process exits the run loop)
     shipChunk(0); shipChunk(1)
-    StreamPipeline.runAvailable(spark, inDir, ckDir, outDir)
+    run()
     // phase 2: restart with the remaining chunks
     shipChunk(2); shipChunk(3)
-    StreamPipeline.runAvailable(spark, inDir, ckDir, outDir)
+    run()
 
     val streamed = spark.read.parquet(s"$outDir/actions")
       .select("trace_id", "action_id", "type", "start_lt")
@@ -299,6 +340,55 @@ class StreamingSpec extends SparkSpec {
 
     assert(streamed == batch,
       s"streamed ${streamed.size} actions != batch ${batch.size}")
+  }
+
+  test("a backlog under the byte budget runs as one micro-batch; a tiny " +
+      "budget splits it; both equal batch classify") {
+    import graft.plans.ChainSim
+    import graft.streaming.StreamPipeline
+    import graft.classifier.ClassifyJob
+
+    val tmp = java.nio.file.Files.createTempDirectory("graft-backlog").toString
+    val (txs, msgs) = ChainSim.simulate(spark, sf)
+    val rows = StreamPipeline.toInputRows(txs, msgs).localCheckpoint()
+    // two block files, cut by the PRODUCING tx's lt
+    val mid = rows.stat.approxQuantile("lt", Array(0.5), 0.0).head.toLong
+    val blocks = Seq(col("lt") < mid, col("lt") >= mid).zipWithIndex.map {
+      case (cut, i) =>
+        rows.filter(cut).coalesce(1).write.parquet(s"$tmp/stage$i")
+        new java.io.File(s"$tmp/stage$i").listFiles()
+          .find(_.getName.endsWith(".parquet")).get
+    }
+    assert(blocks.map(_.length).sum <= StreamPipeline.MaxBatchBytes)
+
+    val key = Seq("trace_id", "action_id", "type", "start_lt")
+    val (_, _, txsWithTrace) = ChainSim.assembled(spark, sf)
+    val batch = ClassifyJob.run(spark, txsWithTrace, msgs).toDF()
+      .select(key.head, key.tail: _*).collect().map(_.toSeq).toSet
+
+    // (name, budget) → micro-batches that read input, streamed actions
+    def run(name: String, budget: Option[Long]): (Int, Set[Seq[Any]]) = {
+      val (in, ck, out) = (s"$tmp/$name/in", s"$tmp/$name/ck", s"$tmp/$name/out")
+      new java.io.File(in).mkdirs()
+      blocks.zipWithIndex.foreach { case (f, i) =>
+        java.nio.file.Files.copy(f.toPath,
+          java.nio.file.Paths.get(s"$in/block$i.parquet"))
+      }
+      val q = budget.fold(StreamPipeline.runAvailable(spark, in, ck, out))(
+        StreamPipeline.runAvailable(spark, in, ck, out, _))
+      val streamed = spark.read.parquet(s"$out/actions")
+        .select(key.head, key.tail: _*).collect().map(_.toSeq).toSet
+      (q.recentProgress.count(_.numInputRows > 0), streamed)
+    }
+
+    val (oneBatch, streamedOne) = run("budget", None)
+    assert(oneBatch == 1, s"a two-block backlog ran as $oneBatch micro-batches")
+    assert(streamedOne == batch,
+      s"streamed ${streamedOne.size} actions != batch ${batch.size}")
+    val (split, streamedSplit) = run("tiny", Some(1L))
+    assert(split >= 2, s"a 1-byte budget ran the backlog as $split micro-batch")
+    assert(streamedSplit == batch,
+      s"streamed ${streamedSplit.size} actions != batch ${batch.size}")
   }
 
   test("T6 lifecycle: pending actions replaced on finalization (federate + reclassify)") {

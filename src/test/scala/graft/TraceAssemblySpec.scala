@@ -98,4 +98,39 @@ class TraceAssemblySpec extends SparkSpec {
     assert(byMsg("m8").getAs[String]("edge_type") == "sys")
     assert(!byMsg.contains("m7"), "log message must not create an edge")
   }
+
+  test("every edge and trace row of the join edge cases is pinned") {
+    // an out-message consumed twice (d1 by T2 and T3), an unconsumed
+    // out-message with no destination (lg: no edge), an in-message with a
+    // null msg_hash (T4: never matches a producer, so broken), and two
+    // external in-edges on one root (T1: external_hash = min)
+    val txs = spark.createDataFrame(java.util.Arrays.asList(
+      tx("T1", 10), tx("T2", 20), tx("T3", 30), tx("T4", 40)), txSchema)
+    val msgs = spark.createDataFrame(java.util.Arrays.asList(
+      msg("x9", "T1", "in", null, "0:P"),
+      msg("x3", "T1", "in", null, "0:P"),
+      msg("d1", "T1", "out", "0:P", "0:Q"),
+      msg("lg", "T1", "out", "0:P", null),
+      msg("d1", "T2", "in", "0:P", "0:Q"),
+      msg("d1", "T3", "in", "0:P", "0:Q"),
+      msg(null, "T4", "in", "0:R", "0:S")), msgSchema)
+    val (traces, edges, _) = TraceAssembly.assemble(txs, msgs)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    assert(edges.columns.toSeq == Seq("trace_id", "msg_hash", "left_tx",
+      "right_tx", "edge_type", "incomplete", "broken"))
+    assert(rows(edges) == Seq(
+      "T1|d1|T1|T2|ord|false|false",
+      "T1|d1|T1|T3|ord|false|false",
+      "T1|x3|null|T1|ext|false|false",
+      "T1|x9|null|T1|ext|false|false",
+      "T4|null|null|T4|ord|false|true"))
+    assert(traces.columns.toSeq == Seq("trace_id", "nodes_", "start_lt",
+      "end_lt", "start_utime", "end_utime", "mc_seqno_start", "mc_seqno_end",
+      "edges_", "pending_edges_", "external_hash", "state",
+      "classification_state"))
+    assert(rows(traces) == Seq(
+      "T1|3|10|30|10|30|100|100|4|0|x3|complete|unclassified",
+      "T4|1|40|40|40|40|100|100|0|0|null|broken|unclassified"))
+  }
 }
