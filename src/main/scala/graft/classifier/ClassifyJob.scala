@@ -38,7 +38,7 @@ case class ClassifyInputRow(
   * silver scan prunes the constant columns entirely. classifyGroupChain
   * re-injects the constants, producing byte-identical TxLite/MsgLite
   * inputs to the matcher sweep (asserted equal to the wide path in
-  * ClassifySpec). Callers outside ChainSim keep [[ClassifyInputRow]].
+  * ChainShapeSpec). Callers outside ChainSim keep [[ClassifyInputRow]].
   * Must be visible to Catalyst codegen — do not make private. */
 case class ChainInputRow(
     trace_id: String, hash: String, account: String, lt: Long, now: Int,
@@ -264,7 +264,7 @@ object ClassifyJob {
   /** The narrow-row twin of [[classifyFlat]] for ChainSim-shaped inputs
     * (see [[ChainInputRow]]): 15-field deserialization, constants
     * re-injected in [[classifyGroupChain]]. Identical matcher inputs ⇒
-    * identical output (ClassifySpec asserts equality with the wide
+    * identical output (ChainShapeSpec asserts equality with the wide
     * path on the protocol sim). */
   private def classifyFlatChain[T](spark: SparkSession, txs: DataFrame,
       messages: DataFrame, dims: ClassifyDims)(
@@ -404,114 +404,6 @@ object ClassifyJob {
         if (i < 0) state else conv(a.productElement(i))): _*))
       .toDF()
   }
-
-  /** Profiling probe: the chain-shape classify sweep, count only. */
-  def runCountProbeChain(spark: SparkSession, txs: DataFrame,
-      messages: DataFrame): Long = {
-    import spark.implicits._
-    chainJoined(txs, messages)(spark)
-      .groupBy(col("trace_id")).as[String, ChainInputRow]
-      .mapGroups { (traceId, rows) =>
-        classifyGroupChain(traceId, rows, ProtocolMatchers.registry).size
-      }.reduce(_ + _).toLong
-  }
-
-  /** Profiling probe: chain-shape join + shuffle + group materialization
-    * without matcher work. */
-  def runShuffleProbeChain(spark: SparkSession, txs: DataFrame,
-      messages: DataFrame): Long = {
-    import spark.implicits._
-    chainJoined(txs, messages)(spark)
-      .groupBy(col("trace_id")).as[String, ChainInputRow]
-      .mapGroups { (_, rows) => rows.size }
-      .reduce(_ + _).toLong
-  }
-
-  /** Profiling probe: the same classify sweep but emitting only a count
-    * per trace — isolates matcher CPU from the wide ActionRow encoder. */
-  def runCountProbe(spark: SparkSession, txs: DataFrame,
-      messages: DataFrame): Long = {
-    import spark.implicits._
-    val joined = txs.select(
-        col("trace_id"), col("hash"), col("account"), col("lt"), col("now"),
-        coalesce(col("orig_status"), lit("active")).as("orig_status"),
-        coalesce(col("end_status"), lit("active")).as("end_status"),
-        coalesce(col("aborted"), lit(false)).as("aborted"),
-        col("compute_exit_code"), col("action_result_code"),
-        coalesce(col("total_fees"), lit(0L)).as("total_fees"),
-        coalesce(col("descr"), lit("ord")).as("descr"),
-        (if (txs.columns.contains("mc_block_seqno")) col("mc_block_seqno")
-         else lit(null).cast("int")).as("mc_block_seqno"))
-      .join(messages.select(col("tx_hash").as("hash"), col("msg_hash"),
-        col("direction"), col("source"), col("destination"), col("value"),
-        col("opcode"), col("bounce"), col("bounced"), col("created_lt"),
-        (if (messages.columns.contains("body")) col("body")
-         else lit(null).cast("string")).as("body"),
-        (if (messages.columns.contains("init_state")) col("init_state")
-         else lit(null).cast("string")).as("init_state"),
-        (if (messages.columns.contains("msg_seq")) col("msg_seq")
-         else lit(null).cast("int")).as("msg_seq"),
-        (if (messages.columns.contains("created_at"))
-          col("created_at").cast("long")
-         else lit(null).cast("long")).as("created_at")),
-        Seq("hash"), "left")
-      .as[ClassifyInputRow]
-    joined.groupBy(col("trace_id")).as[String, ClassifyInputRow]
-      .mapGroups { (traceId, rows) =>
-        classifyGroup(traceId, rows, ProtocolMatchers.registry).size
-      }.reduce(_ + _).toLong
-  }
-
-  /** Profiling probe: the same wide join + trace_id shuffle + group
-    * materialization as the classify sweep, but the group body only
-    * counts rows — isolates shuffle/grouping cost from matcher CPU. */
-  def runShuffleProbe(spark: SparkSession, txs: DataFrame,
-      messages: DataFrame): Long = {
-    import spark.implicits._
-    classifyFlatProbeJoined(txs, messages)(spark)
-      .groupBy(col("trace_id")).as[String, ClassifyInputRow]
-      .mapGroups { (_, rows) => rows.size }
-      .reduce(_ + _).toLong
-  }
-
-  /** Profiling probe: just the wide tx⟕msg join, no grouping. */
-  def runJoinProbe(spark: SparkSession, txs: DataFrame,
-      messages: DataFrame): Long =
-    classifyFlatProbeJoined(txs, messages)(spark).count()
-
-  private def classifyFlatProbeJoined(txs: DataFrame, messages: DataFrame)(
-      spark: SparkSession): Dataset[ClassifyInputRow] = {
-    import spark.implicits._
-    txs.select(
-        col("trace_id"), col("hash"), col("account"), col("lt"), col("now"),
-        coalesce(col("orig_status"), lit("active")).as("orig_status"),
-        coalesce(col("end_status"), lit("active")).as("end_status"),
-        coalesce(col("aborted"), lit(false)).as("aborted"),
-        col("compute_exit_code"), col("action_result_code"),
-        coalesce(col("total_fees"), lit(0L)).as("total_fees"),
-        coalesce(col("descr"), lit("ord")).as("descr"),
-        (if (txs.columns.contains("mc_block_seqno")) col("mc_block_seqno")
-         else lit(null).cast("int")).as("mc_block_seqno"))
-      .join(messages.select(col("tx_hash").as("hash"), col("msg_hash"),
-        col("direction"), col("source"), col("destination"), col("value"),
-        col("opcode"), col("bounce"), col("bounced"), col("created_lt"),
-        (if (messages.columns.contains("body")) col("body")
-         else lit(null).cast("string")).as("body"),
-        (if (messages.columns.contains("init_state")) col("init_state")
-         else lit(null).cast("string")).as("init_state"),
-        (if (messages.columns.contains("msg_seq")) col("msg_seq")
-         else lit(null).cast("int")).as("msg_seq"),
-        (if (messages.columns.contains("created_at"))
-          col("created_at").cast("long")
-         else lit(null).cast("long")).as("created_at")),
-        Seq("hash"), "left")
-      .as[ClassifyInputRow]
-  }
-
-  /** Profiling probe: the per-trace dim-map branch alone. */
-  def traceDimsProbe(spark: SparkSession, txs: DataFrame,
-      messages: DataFrame, dims: ClassifyDims): Long =
-    traceDims(spark, txs, messages, dims).count()
 
   /** One-pass decode-for-keys column: every address-shaped field the
     * registered decode surface extracts from a message body

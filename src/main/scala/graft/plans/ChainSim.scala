@@ -56,14 +56,6 @@ object ChainSim {
     * single silver-layer materialization reused by all of them, exactly
     * as production materializes trace_id at ingest rather than re-running
     * connected components per downstream job. */
-  // profiling accessors (Profile15) — not part of the query surface
-  def chainRootsPublic(spark: SparkSession, dir: String): DataFrame =
-    chainRoots(spark, dir)
-  def b15SimPublic(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
-    protocolSim(spark, dir, b15Opcodes, Some(b15Bodies))
-  def b15WalletDimPublic(spark: SparkSession, dir: String): DataFrame =
-    b15WalletDim(spark, dir)
-
   private def chainRoots(spark: SparkSession, dir: String): DataFrame = {
     // the fixpoint's final checkpoint is dead once the silver table is
     // written — release it (only set when the build lambda actually ran)
@@ -384,7 +376,7 @@ object ChainSim {
         txsWithTrace)
       // narrow-output classify: only the columns the variant's queries
       // read materialize through the encoder — the wide 60-field
-      // ActionRow encoder was HALF the classify cost (Profile15)
+      // ActionRow encoder was measured at HALF the classify cost
       // chainShape: protocolSim constructs exactly the ChainInputRow
       // constants — the narrow group encoder (r17, guide §4)
       ClassifyJob.runProjected(spark, txw, msgs, d,
@@ -1083,7 +1075,7 @@ object ChainSim {
     val msgs = SilverStore.table(spark, dir, "b16_msgs")(built._2)
     // narrow-output classify: only these 4 columns materialize through
     // the encoder — the full 60-field ActionRow encoder measured 2× on
-    // the sweep (Profile15)
+    // the sweep
     val acts = SilverStore.table(spark, dir, "b16_acts")(
       // chainShape: b16Build mirrors protocolSim's constant columns
       ClassifyJob.runProjected(spark, txw, msgs,
