@@ -1,18 +1,11 @@
 package graft.classifier
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Spark integration of the classifier (SURVEY §3.3 Spark shape):
-  * traces ⋈ transactions ⋈ messages → groupByKey(trace_id) →
-  * flatMapGroups(classify) → actions. The reference's Redis interface
-  * repository becomes a pre-joined per-trace map (no IO inside matchers).
-  *
-  * Scale: one shuffle on trace_id; per-group work is bounded by the
-  * 4000-node big-trace cutoff, so no group can straggle unboundedly.
-  */
-/** Flattened tx⟕msg row for the trace-group encoder (must be visible to
-  * Catalyst codegen — do not make private). */
+/** Flattened tx⟕msg row of [[ClassifyJob.Wide]], the trace-group
+  * encoder's row for any input frame (must be visible to Catalyst
+  * codegen — do not make private). */
 case class ClassifyInputRow(
       trace_id: String, hash: String, account: String, lt: Long, now: Int,
       orig_status: String, end_status: String, aborted: Boolean,
@@ -28,18 +21,13 @@ case class ClassifyInputRow(
     msg_seq: Option[Int] = None,
     created_at: Option[Long] = None)
 
-/** Narrow tx⟕msg row for the CHAIN-SIM classify shape (r17, guide §4):
-  * every ChainSim-built frame (protocolSim, simulate, b16Build) holds
-  * end_status='active', aborted=false, compute/action result codes NULL,
-  * total_fees=0, descr='ord', bounce=bounced=false and carries no
-  * init_state/msg_seq/created_at columns BY CONSTRUCTION — so the group
-  * stage deserializes 15 fields instead of 25 and allocates no Option
-  * wrappers (nullable leaves are boxed Java types), and the upstream
-  * silver scan prunes the constant columns entirely. classifyGroupChain
-  * re-injects the constants, producing byte-identical TxLite/MsgLite
-  * inputs to the matcher sweep (asserted equal to the wide path in
-  * ChainShapeSpec). Callers outside ChainSim keep [[ClassifyInputRow]].
-  * Must be visible to Catalyst codegen — do not make private. */
+/** Narrow tx⟕msg row of [[ClassifyJob.Chain]]: 15 fields instead of
+  * 25, and no Option wrappers (nullable leaves are boxed Java types).
+  * The columns it drops are the chain constants; the Chain adapter
+  * checks them in the scan and re-injects them in the group function,
+  * so the matcher sweep sees the same TxLite/MsgLite as through
+  * [[ClassifyInputRow]] (ChainShapeSpec). Must be visible to Catalyst
+  * codegen — do not make private. */
 case class ChainInputRow(
     trace_id: String, hash: String, account: String, lt: Long, now: Int,
     mc_block_seqno: Int, orig_status: String,
@@ -47,6 +35,22 @@ case class ChainInputRow(
     source: String, destination: String,
     value: java.lang.Long, opcode: java.lang.Long,
     created_lt: java.lang.Long, body: String)
+
+/** Row adapter of the one classify scaffold: the tx⟕msg row the
+  * trace-group encoder decodes, the join projection that produces it,
+  * and the row → TxLite / MsgLite functions the group function applies.
+  * Two values: [[ClassifyJob.Wide]] reads any frame,
+  * [[ClassifyJob.Chain]] reads frames that hold the chain constants and
+  * fails the job on a row that does not. */
+sealed abstract class RowAdapter[R] extends Serializable {
+  def encoder: Encoder[R]
+  /** txs(+trace_id) ⟕ messages, projected to the fields of R. */
+  def joined(txs: DataFrame, messages: DataFrame): DataFrame
+  def hash(r: R): String
+  def tx(r: R): TxLite
+  /** None on the null side of a message-less tx. */
+  def msg(r: R): Option[MsgLite]
+}
 
 /** DataFrame-backed dimension feed for the classifier (SURVEY §2.9 G6;
   * the reference's Redis interface repository,
@@ -83,6 +87,20 @@ case class TraceDims(trace_id: String,
     nft: Map[String, NftItemInfo],
     owners: Map[String, String])
 
+/** Spark integration of the classifier (SURVEY §3.3 Spark shape):
+  * traces ⋈ transactions ⋈ messages → group by trace_id →
+  * flatMapGroups(classify) → actions. The reference's Redis interface
+  * repository becomes a pre-joined per-trace map (no IO inside matchers).
+  *
+  * One path: one grouping scaffold (`classifyFlat`, a flatMapGroups arm
+  * and a dims cogroup arm) and one group function (`classifyGroup`).
+  * A [[RowAdapter]] picks the row the group encoder decodes: [[Wide]]
+  * for any frame, [[Chain]] for ChainSim frames, whose constant columns
+  * it checks in the scan and drops from the encoder.
+  *
+  * Scale: one shuffle on trace_id; per-group work is bounded by the
+  * 4000-node big-trace cutoff, so no group can straggle unboundedly.
+  */
 object ClassifyJob {
 
   import org.apache.spark.sql.catalyst.encoders.{AgnosticEncoder, AgnosticEncoders, ExpressionEncoder}
@@ -155,61 +173,160 @@ object ClassifyJob {
     * pre-materialized. */
   def run(spark: SparkSession, txs: DataFrame, messages: DataFrame,
       dims: ClassifyDims = ClassifyDims()): Dataset[ActionRow] = {
-    classifyFlat(spark, txs, messages, dims)((a, _) => a)(actionRowEncoder)
+    classifyFlat(spark, txs, messages, dims, Wide)((a, _) => a)(actionRowEncoder)
   }
 
-  /** Shared grouping scaffold: classify each trace and emit per action
+  /** The wide adapter: [[ClassifyInputRow]], every column the matchers
+    * read, with the reference's null defaults applied in the join
+    * projection. Reads any transactions/messages frame. */
+  object Wide extends RowAdapter[ClassifyInputRow] {
+    def encoder: Encoder[ClassifyInputRow] = Encoders.product[ClassifyInputRow]
+
+    def joined(txs: DataFrame, messages: DataFrame): DataFrame =
+      txs.select(
+          col("trace_id"), col("hash"), col("account"), col("lt"), col("now"),
+          coalesce(col("orig_status"), lit("active")).as("orig_status"),
+          coalesce(col("end_status"), lit("active")).as("end_status"),
+          coalesce(col("aborted"), lit(false)).as("aborted"),
+          col("compute_exit_code"), col("action_result_code"),
+          coalesce(col("total_fees"), lit(0L)).as("total_fees"),
+          coalesce(col("descr"), lit("ord")).as("descr"),
+          optional(txs, "mc_block_seqno", "int"))
+        .join(messages.select(col("tx_hash").as("hash"), col("msg_hash"),
+          col("direction"), col("source"), col("destination"), col("value"),
+          col("opcode"), col("bounce"), col("bounced"), col("created_lt"),
+          optional(messages, "body", "string"),
+          optional(messages, "init_state", "string"),
+          optional(messages, "msg_seq", "int"),
+          (if (messages.columns.contains("created_at"))
+            col("created_at").cast("long")
+           else lit(null).cast("long")).as("created_at")),
+          Seq("hash"), "left")
+
+    def hash(r: ClassifyInputRow): String = r.hash
+
+    def tx(r: ClassifyInputRow): TxLite =
+      TxLite(r.hash, r.account, r.lt, r.now, r.orig_status, r.end_status,
+        r.aborted, r.compute_exit_code, r.action_result_code,
+        r.total_fees, r.descr, r.mc_block_seqno)
+
+    def msg(r: ClassifyInputRow): Option[MsgLite] =
+      r.msg_hash.map(m => MsgLite(m, r.direction.getOrElse("in"),
+        r.source, r.destination, r.value.getOrElse(0L), r.opcode,
+        r.bounce.getOrElse(false), r.bounced.getOrElse(false),
+        r.created_lt, r.body, r.init_state, createdAt = r.created_at,
+        seqNo = r.msg_seq))
+  }
+
+  /** Column `c` of `df`, or a null of type `tpe` when `df` lacks it. */
+  private def optional(df: DataFrame, c: String, tpe: String): Column =
+    (if (df.columns.contains(c)) col(c) else lit(null).cast(tpe)).as(c)
+
+  /** The chain adapter: [[ChainInputRow]], for frames whose dropped
+    * columns hold the chain constants below (every ChainSim frame writes
+    * them through these same values). It decodes 15 fields per row and
+    * re-injects the constants in [[tx]]/[[msg]]; measured 1.2-1.45× on
+    * the ChainSim classify variants against [[Wide]] (r17).
+    *
+    * The constants are checked, not trusted: the join projection filters
+    * each frame through a `raise_error` that fails the job, naming the
+    * column, on the first row holding anything but null or the constant
+    * (the values [[Wide]] would see after its null defaults). The check
+    * runs in the same scan; its only cost is reading the constant
+    * columns. A frame lacking one fails analysis, as under [[Wide]]; a
+    * messages frame with a column the row has no field for
+    * (`init_state`, `msg_seq`, `created_at`) is rejected when the plan
+    * is built. */
+  object Chain extends RowAdapter[ChainInputRow] {
+    val EndStatus = "active"
+    val Aborted = false
+    val TotalFees = 0L
+    val Descr = "ord"
+    /** bounce and bounced alike */
+    val Bounce = false
+
+    /** Dropped tx columns, each with its constant as a typed literal —
+      * the column ChainSim writes and the check compares against. */
+    def txConstants: Seq[(String, Column)] = Seq(
+      "end_status" -> lit(EndStatus), "aborted" -> lit(Aborted),
+      "compute_exit_code" -> lit(null).cast("int"),
+      "action_result_code" -> lit(null).cast("int"),
+      "total_fees" -> lit(TotalFees), "descr" -> lit(Descr))
+
+    /** Dropped message columns, as [[txConstants]]. */
+    def msgConstants: Seq[(String, Column)] = Seq(
+      "bounce" -> lit(Bounce), "bounced" -> lit(Bounce))
+
+    def encoder: Encoder[ChainInputRow] = Encoders.product[ChainInputRow]
+
+    def joined(txs: DataFrame, messages: DataFrame): DataFrame = {
+      // MsgLite fields the row does not carry
+      Seq("init_state", "msg_seq", "created_at").foreach(c =>
+        require(!messages.columns.contains(c),
+        s"ClassifyJob.Chain drops the messages column '$c'; classify " +
+          "this frame through ClassifyJob.Wide"))
+      checked(txs, txConstants).select(col("trace_id"), col("hash"),
+          col("account"), col("lt"), col("now"), col("mc_block_seqno"),
+          coalesce(col("orig_status"), lit("active")).as("orig_status"))
+        .join(checked(messages, msgConstants).select(
+          col("tx_hash").as("hash"), col("msg_hash"),
+          col("direction"), col("source"), col("destination"), col("value"),
+          col("opcode"), col("created_lt"),
+          optional(messages, "body", "string")),
+          Seq("hash"), "left")
+    }
+
+    /** `df` with each constant column checked row by row. */
+    private def checked(df: DataFrame,
+        constants: Seq[(String, Column)]): DataFrame =
+      df.filter(constants.map { case (c, v) =>
+        when(col(c).isNull || (col(c) <=> v), lit(true)).otherwise(
+          raise_error(lit(s"ClassifyJob.Chain: column '$c' holds a value " +
+            s"other than null or $v; classify this frame through " +
+            "ClassifyJob.Wide")))
+      }.reduce(_ && _))
+
+    def hash(r: ChainInputRow): String = r.hash
+
+    def tx(r: ChainInputRow): TxLite =
+      TxLite(r.hash, r.account, r.lt, r.now, r.orig_status, EndStatus,
+        Aborted, None, None, TotalFees, Descr, Some(r.mc_block_seqno))
+
+    // the nullable leaves mirror Wide's defaults (direction 'in', value 0)
+    def msg(r: ChainInputRow): Option[MsgLite] =
+      Option(r.msg_hash).map(m => MsgLite(m,
+        if (r.direction == null) "in" else r.direction,
+        Option(r.source), Option(r.destination),
+        if (r.value == null) 0L else r.value.longValue(),
+        Option(r.opcode).map(_.longValue()),
+        bounce = Bounce, bounced = Bounce,
+        Option(r.created_lt).map(_.longValue()), Option(r.body)))
+  }
+
+  /** The grouping scaffold: classify each trace and emit per action
     * through the CALLER'S encoder — the narrow-output path projects
     * before any encoding happens. The emit callback also receives the
     * trace's classification_state (ok/failed/broken/unclassified) so
     * narrow outputs can carry the per-trace classify outcome without a
     * second sweep. */
-  private def classifyFlat[T](spark: SparkSession, txs: DataFrame,
-      messages: DataFrame, dims: ClassifyDims,
-      chainShape: Boolean = false)(
+  private def classifyFlat[R, T](spark: SparkSession, txs: DataFrame,
+      messages: DataFrame, dims: ClassifyDims, adapter: RowAdapter[R])(
       emit: (ActionRow, String) => T)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
+      implicit enc: Encoder[T]): Dataset[T] = {
     import spark.implicits._
-    if (chainShape)
-      return classifyFlatChain(spark, txs, messages, dims)(emit)
-    val joined = txs.select(
-        col("trace_id"), col("hash"), col("account"), col("lt"), col("now"),
-        coalesce(col("orig_status"), lit("active")).as("orig_status"),
-        coalesce(col("end_status"), lit("active")).as("end_status"),
-        coalesce(col("aborted"), lit(false)).as("aborted"),
-        col("compute_exit_code"), col("action_result_code"),
-        coalesce(col("total_fees"), lit(0L)).as("total_fees"),
-        coalesce(col("descr"), lit("ord")).as("descr"),
-        (if (txs.columns.contains("mc_block_seqno")) col("mc_block_seqno")
-         else lit(null).cast("int")).as("mc_block_seqno"))
-      .join(messages.select(col("tx_hash").as("hash"), col("msg_hash"),
-        col("direction"), col("source"), col("destination"), col("value"),
-        col("opcode"), col("bounce"), col("bounced"), col("created_lt"),
-        (if (messages.columns.contains("body")) col("body")
-         else lit(null).cast("string")).as("body"),
-        (if (messages.columns.contains("init_state")) col("init_state")
-         else lit(null).cast("string")).as("init_state"),
-        (if (messages.columns.contains("msg_seq")) col("msg_seq")
-         else lit(null).cast("int")).as("msg_seq"),
-        (if (messages.columns.contains("created_at"))
-          col("created_at").cast("long")
-         else lit(null).cast("long")).as("created_at")),
-        Seq("hash"), "left")
-      .as[ClassifyInputRow]
-
     // column-keyed grouping (groupBy(col).as[K, V]), NOT
     // groupByKey(_.trace_id): the lambda keyer plans an AppendColumns
-    // that deserializes EVERY row into a 25-field ClassifyInputRow
-    // object (Options boxed per field) just to read one string — a full
-    // extra object pass per variant before the real per-group
-    // deserialization (guide §4; measured: the shuffle+group probe
-    // drops ~35-40% at sf0.1 with the column key).
+    // that deserializes EVERY row into the adapter's row object just to
+    // read one string — a full extra object pass per variant before the
+    // real per-group deserialization (guide §4; measured: the
+    // shuffle+group probe drops ~35-40% at sf0.1 with the column key).
+    val grouped = adapter.joined(txs, messages).groupBy(col("trace_id"))
+      .as[String, R](Encoders.STRING, adapter.encoder)
     if (dims.isEmpty)
-      joined.groupBy(col("trace_id")).as[String, ClassifyInputRow]
-        .flatMapGroups { (traceId, rows) =>
-          classifyGroup(traceId, rows, ProtocolMatchers.registry)
-            .map(emit.tupled)
-        }
+      grouped.flatMapGroups { (traceId, rows) =>
+        classifyGroup(traceId, rows, adapter, ProtocolMatchers.registry)
+          .map(emit.tupled)
+      }
     else {
       // dims mode: one extra shuffle pair (accounts→dims join, then the
       // per-trace maps cogroup back on trace_id). The provided-dim flag
@@ -219,7 +336,7 @@ object ClassifyJob {
       val hasJw = dims.jettonWallets.isDefined
       val hasNft = dims.nftItems.isDefined
       val perTrace = traceDims(spark, txs, messages, dims)
-      joined.groupBy(col("trace_id")).as[String, ClassifyInputRow]
+      grouped
         .cogroup(perTrace.groupBy(col("trace_id")).as[String, TraceDims]) {
           (traceId, rows, ds) =>
           val d =
@@ -230,119 +347,22 @@ object ClassifyJob {
             if (hasJw) Some(d.jw) else None,
             if (hasNft) Some(d.nft) else None,
             walletOwners = d.owners)
-          classifyGroup(traceId, rows, registry).map(emit.tupled)
+          classifyGroup(traceId, rows, adapter, registry).map(emit.tupled)
         }
     }
   }
 
-  private def classifyGroup(traceId: String,
-      rows: Iterator[ClassifyInputRow],
-      registry: Seq[Matching.BlockMatcher])
+  private def classifyGroup[R](traceId: String, rows: Iterator[R],
+      adapter: RowAdapter[R], registry: Seq[Matching.BlockMatcher])
       : Iterator[(ActionRow, String)] = {
     val buf = rows.toSeq
-    val txsOf = buf.groupBy(_.hash).map { case (h, rs) =>
-      val r = rs.head
-      TxLite(h, r.account, r.lt, r.now, r.orig_status, r.end_status,
-        r.aborted, r.compute_exit_code, r.action_result_code,
-        r.total_fees, r.descr, r.mc_block_seqno)
+    val txsOf = buf.groupBy(adapter.hash).map { case (_, rs) =>
+      adapter.tx(rs.head)
     }.toSeq
     val msgsByTx: Map[String, Seq[MsgLite]] = buf
-      .filter(_.msg_hash.isDefined)
-      .groupBy(_.hash)
-      .map { case (h, rs) =>
-        h -> rs.map(r => MsgLite(r.msg_hash.get, r.direction.getOrElse("in"),
-          r.source, r.destination, r.value.getOrElse(0L), r.opcode,
-          r.bounce.getOrElse(false), r.bounced.getOrElse(false),
-          r.created_lt, r.body, r.init_state, createdAt = r.created_at,
-          seqNo = r.msg_seq))
-      }
-    val (actions, state) =
-      Classifier.classifyStatedWith(traceId, txsOf, msgsByTx, registry)
-    actions.iterator.map(a => (a, state))
-  }
-
-  /** The narrow-row twin of [[classifyFlat]] for ChainSim-shaped inputs
-    * (see [[ChainInputRow]]): 15-field deserialization, constants
-    * re-injected in [[classifyGroupChain]]. Identical matcher inputs ⇒
-    * identical output (ChainShapeSpec asserts equality with the wide
-    * path on the protocol sim). */
-  private def classifyFlatChain[T](spark: SparkSession, txs: DataFrame,
-      messages: DataFrame, dims: ClassifyDims)(
-      emit: (ActionRow, String) => T)(
-      implicit enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    import spark.implicits._
-    val joined = chainJoined(txs, messages)(spark)
-    if (dims.isEmpty)
-      joined.groupBy(col("trace_id")).as[String, ChainInputRow]
-        .flatMapGroups { (traceId, rows) =>
-          classifyGroupChain(traceId, rows, ProtocolMatchers.registry)
-            .map(emit.tupled)
-        }
-    else {
-      val hasIface = dims.interfaces.isDefined
-      val hasJw = dims.jettonWallets.isDefined
-      val hasNft = dims.nftItems.isDefined
-      val perTrace = traceDims(spark, txs, messages, dims)
-      joined.groupBy(col("trace_id")).as[String, ChainInputRow]
-        .cogroup(perTrace.groupBy(col("trace_id")).as[String, TraceDims]) {
-          (traceId, rows, ds) =>
-          val d =
-            if (ds.hasNext) ds.next()
-            else TraceDims(traceId, Map.empty, Map.empty, Map.empty, Map.empty)
-          val registry = ProtocolMatchers.registryForDims(
-            if (hasIface) Some(d.ifaces) else None,
-            if (hasJw) Some(d.jw) else None,
-            if (hasNft) Some(d.nft) else None,
-            walletOwners = d.owners)
-          classifyGroupChain(traceId, rows, registry).map(emit.tupled)
-        }
-    }
-  }
-
-  /** The narrow join: only the 7 varying tx columns and 8 varying msg
-    * columns — the silver scan prunes the constant ones. */
-  private def chainJoined(txs: DataFrame, messages: DataFrame)(
-      spark: SparkSession): Dataset[ChainInputRow] = {
-    import spark.implicits._
-    txs.select(col("trace_id"), col("hash"), col("account"), col("lt"),
-        col("now"), col("mc_block_seqno"),
-        coalesce(col("orig_status"), lit("active")).as("orig_status"))
-      .join(messages.select(col("tx_hash").as("hash"), col("msg_hash"),
-        col("direction"), col("source"), col("destination"), col("value"),
-        col("opcode"), col("created_lt"),
-        (if (messages.columns.contains("body")) col("body")
-         else lit(null).cast("string")).as("body")),
-        Seq("hash"), "left")
-      .as[ChainInputRow]
-  }
-
-  /** [[classifyGroup]] over the narrow chain row: the dropped columns
-    * come back as the constants the ChainSim frames guarantee, so
-    * TxLite/MsgLite — and hence the sweep — are identical to the wide
-    * path's. The wide path's per-field coalesce defaults (direction
-    * 'in', value 0) are mirrored on the nullable leaves. */
-  private def classifyGroupChain(traceId: String,
-      rows: Iterator[ChainInputRow],
-      registry: Seq[Matching.BlockMatcher])
-      : Iterator[(ActionRow, String)] = {
-    val buf = rows.toSeq
-    val txsOf = buf.groupBy(_.hash).map { case (h, rs) =>
-      val r = rs.head
-      TxLite(h, r.account, r.lt, r.now, r.orig_status, "active",
-        aborted = false, None, None, 0L, "ord", Some(r.mc_block_seqno))
-    }.toSeq
-    val msgsByTx: Map[String, Seq[MsgLite]] = buf
-      .filter(_.msg_hash != null)
-      .groupBy(_.hash)
-      .map { case (h, rs) =>
-        h -> rs.map(r => MsgLite(r.msg_hash,
-          if (r.direction == null) "in" else r.direction,
-          Option(r.source), Option(r.destination),
-          if (r.value == null) 0L else r.value.longValue(),
-          Option(r.opcode).map(_.longValue()),
-          bounce = false, bounced = false,
-          Option(r.created_lt).map(_.longValue()), Option(r.body), None))
-      }
+      .flatMap(r => adapter.msg(r).map(adapter.hash(r) -> _))
+      .groupBy(_._1)
+      .map { case (h, ms) => h -> ms.map(_._2) }
     val (actions, state) =
       Classifier.classifyStatedWith(traceId, txsOf, msgsByTx, registry)
     actions.iterator.map(a => (a, state))
@@ -351,10 +371,15 @@ object ClassifyJob {
   /** Narrow-output classify: the same sweep, but rows materialize ONLY
     * the requested columns through a reduced Row encoder instead of the
     * full 60-field ActionRow encoder. The detail structs are converted
-    * recursively (case class → Row) just for the kept columns. */
+    * recursively (case class → Row) just for the kept columns.
+    *
+    * `adapter` picks the input row: [[Wide]] (the default) reads any
+    * frame; [[Chain]] reads the narrow row and fails the job on a row
+    * whose dropped columns break the chain constants. Both run the same
+    * scaffold and group function. */
   def runProjected(spark: SparkSession, txs: DataFrame, messages: DataFrame,
       dims: ClassifyDims, cols: Seq[String],
-      chainShape: Boolean = false): DataFrame = {
+      adapter: RowAdapter[_] = Wide): DataFrame = {
     // ActionRow-only columns that the DDL schema does not carry (the
     // involved-accounts list is exploded into action_accounts
     // downstream), plus classification_state — a TRACES column the
@@ -399,7 +424,7 @@ object ClassifyJob {
     }
     implicit val enc: org.apache.spark.sql.Encoder[org.apache.spark.sql.Row] =
       org.apache.spark.sql.Encoders.row(schema)
-    classifyFlat(spark, txs, messages, dims, chainShape)((a, state) =>
+    classifyFlat(spark, txs, messages, dims, adapter)((a, state) =>
       org.apache.spark.sql.Row(idxs.map(i =>
         if (i < 0) state else conv(a.productElement(i))): _*))
       .toDF()
@@ -439,7 +464,7 @@ object ClassifyJob {
     // carries a persisted `body_keys` column (ingest decoded once at
     // silver-write time — bodyKeysCol), use it: the dims branch then
     // reads a narrow array column instead of re-running the decode pass
-    // (measured at ~31% of b15's wall time at sf1, DecodeShareBench),
+    // (measured at ~31% of b15's wall time at sf1, OPTIMIZATION_r16.md),
     // and the body column is not even scanned on this branch.
     val keysCol =
       if (messages.columns.contains("body_keys"))

@@ -88,18 +88,16 @@ object ChainSim {
         col("end_utime").cast("long").as("trace_end_utime"))
       // prune to the columns its consumers (a03/b02/b07/b08, Silver)
       // read BEFORE writing — the unread wide detail structs would
-      // otherwise bloat the silver files
-      // chainShape: simulate's frames guarantee the ChainInputRow
-      // constants (end_status 'active', aborted false, no codes/fees,
-      // bounce/bounced false, no init_state/msg_seq/created_at) —
-      // the narrow 15-field group encoder applies (r17, guide §4)
+      // otherwise bloat the silver files. simulate writes the chain
+      // constants (chainTxs, explodeInOutMsgs): the narrow Chain row
+      // applies, and checks them
       ClassifyJob.runProjected(spark, txsWithTrace, msgs,
           graft.classifier.ClassifyDims(),
           Seq("trace_id", "action_id", "type", "start_lt", "end_lt",
             "start_utime", "end_utime", "source", "destination", "success",
             "ancestor_type", "ton_transfer_data", "accounts",
             "classification_state"),
-          chainShape = true)
+          ClassifyJob.Chain)
         .join(meta, Seq("trace_id"), "left") // traces is a fact table — shuffle join, never broadcast
     }
 
@@ -146,20 +144,8 @@ object ChainSim {
   private def simulateUncached(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val ev = chainedEvents(spark, dir)
 
-    val txs = ev.select(
-      concat(lit("T"), col("event_id").cast("string")).as("hash"),
-      col("acct").as("account"),
-      col("event_id").as("lt"),
-      col("event_id").cast("int").as("now"),
-      expr("CAST(event_id DIV 50 + 1 AS INT)").as("mc_block_seqno"),
-      when(col("event_type") === "signup", "uninit").otherwise("active")
-        .as("orig_status"),
-      lit("active").as("end_status"),
-      lit(false).as("aborted"),
-      lit(null).cast("int").as("compute_exit_code"),
-      lit(null).cast("int").as("action_result_code"),
-      lit(0L).as("total_fees"),
-      lit("ord").as("descr"))
+    val txs = chainTxs(ev, col("acct"),
+      when(col("event_type") === "signup", "uninit").otherwise("active"))
 
     val opcode = when(col("event_type") === "click", 1L)
       .when(col("event_type") === "view", 2L)
@@ -259,17 +245,7 @@ object ChainSim {
       else ev0.repartition(
         spark.sessionState.conf.numShufflePartitions, col("event_id"))
     val body = bodyOf.getOrElse(lit(null).cast("string"))
-    val txs = ev0.select(
-      concat(lit("T"), col("event_id").cast("string")).as("hash"),
-      col("acct").as("account"),
-      col("event_id").as("lt"),
-      col("event_id").cast("int").as("now"),
-      expr("CAST(event_id DIV 50 + 1 AS INT)").as("mc_block_seqno"),
-      lit("active").as("orig_status"), lit("active").as("end_status"),
-      lit(false).as("aborted"),
-      lit(null).cast("int").as("compute_exit_code"),
-      lit(null).cast("int").as("action_result_code"),
-      lit(0L).as("total_fees"), lit("ord").as("descr"))
+    val txs = chainTxs(ev0, col("acct"), lit("active"))
     // ONE scan + ONE body/opcode evaluation per event (r17, guide §6/§4):
     // the previous in/out unionByName was two scans of chained_events,
     // each paying the pos-window AND the per-message BOC body-synthesis
@@ -284,6 +260,20 @@ object ChainSim {
       col("acct").as("dest"), col("acct").as("src"),
       opcodeOf.as("op"), body.as("b"))))
   }
+
+  /** One transaction per event of `ev`: the chain columns every
+    * simulation shares, the given account and orig_status, and the chain
+    * constants that ClassifyJob.Chain checks and re-injects. */
+  private def chainTxs(ev: DataFrame, account: Column,
+      origStatus: Column): DataFrame =
+    ev.select(Seq(
+      concat(lit("T"), col("event_id").cast("string")).as("hash"),
+      account.as("account"),
+      col("event_id").as("lt"),
+      col("event_id").cast("int").as("now"),
+      expr("CAST(event_id DIV 50 + 1 AS INT)").as("mc_block_seqno"),
+      origStatus.as("orig_status")) ++
+      ClassifyJob.Chain.txConstants.map { case (c, v) => v.as(c) }: _*)
 
   /** (event_id, prev_id, value, dest, src, op, b) → the message frame:
     * every event's in-copy, plus — when the event has a parent — the
@@ -317,16 +307,16 @@ object ChainSim {
       col("src"),
       hasBody = bodyOnOut)
     withCols
-      .select(
+      .select(Seq(
         concat(lit("m"), col("event_id").cast("string")).as("msg_hash"),
         col("dest").as("destination"),
         (col("value") * 100).cast("long").as("value"),
-        col("op").as("opcode"),
-        lit(false).as("bounce"), lit(false).as("bounced"),
+        col("op").as("opcode")) ++
+        ClassifyJob.Chain.msgConstants.map { case (c, v) => v.as(c) } ++ Seq(
         col("event_id").as("created_lt"),
         col("b").as("body0"),
         explode(when(col("prev_id").isNull, array(inS))
-          .otherwise(array(inS, outS))).as("m"))
+          .otherwise(array(inS, outS))).as("m")): _*)
       .select(col("msg_hash"), col("m.tx_hash").as("tx_hash"),
         col("m.direction").as("direction"), col("m.source").as("source"),
         col("destination"), col("value"), col("opcode"),
@@ -376,11 +366,11 @@ object ChainSim {
         txsWithTrace)
       // narrow-output classify: only the columns the variant's queries
       // read materialize through the encoder — the wide 60-field
-      // ActionRow encoder was measured at HALF the classify cost
-      // chainShape: protocolSim constructs exactly the ChainInputRow
-      // constants — the narrow group encoder (r17, guide §4)
+      // ActionRow encoder was measured at HALF the classify cost.
+      // protocolSim writes the chain constants: the narrow Chain row
+      // applies, and checks them
       ClassifyJob.runProjected(spark, txw, msgs, d,
-        (protoBaseCols ++ keep).distinct, chainShape = true)
+        (protoBaseCols ++ keep).distinct, ClassifyJob.Chain)
     }
 
   /** b06 opcode mapping (see protocolSim doc). */
@@ -939,14 +929,6 @@ object ChainSim {
         lit(graft.classifier.Opcodes.StonfiV2PayTo))
       .otherwise(lit(1L))
 
-  /** The b15 corpus (txs, msgs) pre-classify, exposed for the
-    * decode-share micro-benchmark (graft.DecodeShareBench → SCALING.md):
-    * how much of b15's wall time is ONE pass of the full decode surface
-    * over its message bodies. */
-  private[graft] def b15Corpus(spark: SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    protocolSim(spark, dir, b15Opcodes, Some(b15Bodies))
-
   private def b15Wallet(userId: Long): String = "0:" + f"$userId%064X"
   private def b15Master(userId: Long): String =
     "0:" + f"${userId + 5000000L}%064X"
@@ -1077,11 +1059,11 @@ object ChainSim {
     // the encoder — the full 60-field ActionRow encoder measured 2× on
     // the sweep
     val acts = SilverStore.table(spark, dir, "b16_acts")(
-      // chainShape: b16Build mirrors protocolSim's constant columns
+      // b16Build writes the chain constants (chainTxs)
       ClassifyJob.runProjected(spark, txw, msgs,
         graft.classifier.ClassifyDims(),
         Seq("trace_id", "start_lt", "type", "tx_hashes"),
-        chainShape = true))
+        ClassifyJob.Chain))
     (acts, txw, msgs)
   }
 
@@ -1104,17 +1086,7 @@ object ChainSim {
         b16JettonBodyUdf(col("event_id").cast("long"),
           col("user_id").cast("long")))
         .otherwise(lit(null).cast("string"))
-      val txs = ev.select(
-        concat(lit("T"), col("event_id").cast("string")).as("hash"),
-        acctOf(col("event_id")).as("account"),
-        col("event_id").as("lt"),
-        col("event_id").cast("int").as("now"),
-        expr("CAST(event_id DIV 50 + 1 AS INT)").as("mc_block_seqno"),
-        lit("active").as("orig_status"), lit("active").as("end_status"),
-        lit(false).as("aborted"),
-        lit(null).cast("int").as("compute_exit_code"),
-        lit(null).cast("int").as("action_result_code"),
-        lit(0L).as("total_fees"), lit("ord").as("descr"))
+      val txs = chainTxs(ev, acctOf(col("event_id")), lit("active"))
       // one scan + one jetton-BOC build per event (r17 — see
       // explodeInOutMsgs); b16's endpoints are parity accounts, so dest/
       // src are the acctOf projections of this/parent event; the

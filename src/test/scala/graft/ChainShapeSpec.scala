@@ -1,12 +1,14 @@
 package graft
 
 import graft.classifier._
-import org.apache.spark.sql.functions.lit
+import graft.plans.ChainSim
+import org.apache.spark.sql.functions.{col, lit, when}
 
-/** The narrow chain-shape classify path (ChainInputRow, r17) must emit
-  * EXACTLY what the wide ClassifyInputRow path emits whenever the input
-  * frames satisfy the ChainSim constant-column invariants — the narrow
-  * encoder drops only columns whose values the group stage re-injects. */
+/** The narrow chain classify row (ClassifyJob.Chain) must emit EXACTLY
+  * what the wide row (ClassifyJob.Wide) emits whenever the input frames
+  * hold the chain constants — the narrow encoder drops only columns
+  * whose values the group function re-injects — and must fail loudly,
+  * naming the column, on a frame that does not. */
 class ChainShapeSpec extends SparkSpec {
 
   private val nftOp = Opcodes.NftTransfer
@@ -53,7 +55,7 @@ class ChainShapeSpec extends SparkSpec {
     val wide = ClassifyJob.runProjected(spark, txDf, msgDf,
       ClassifyDims(), cols)
     val narrow = ClassifyJob.runProjected(spark, txDf, msgDf,
-      ClassifyDims(), cols, chainShape = true)
+      ClassifyDims(), cols, ClassifyJob.Chain)
     val (w, n) = (rowsOf(wide), rowsOf(narrow))
     assert(w.nonEmpty, "fixture must classify at least one action")
     assert(n == w, s"narrow path diverged:\nwide=$w\nnarrow=$n")
@@ -66,9 +68,65 @@ class ChainShapeSpec extends SparkSpec {
     val dims = ClassifyDims(jettonWallets = Some(jw))
     val wide = ClassifyJob.runProjected(spark, txDf, msgDf, dims, cols)
     val narrow = ClassifyJob.runProjected(spark, txDf, msgDf, dims, cols,
-      chainShape = true)
+      ClassifyJob.Chain)
     val (w, n) = (rowsOf(wide), rowsOf(narrow))
     assert(w.nonEmpty, "fixture must classify at least one action")
     assert(n == w, s"narrow dims path diverged:\nwide=$w\nnarrow=$n")
+  }
+
+  /** `df` written to parquet and read back, as every ChainSim silver
+    * is: no literal is left in the plan for the optimizer to fold. */
+  private def reread(df: org.apache.spark.sql.DataFrame) = {
+    val dir = java.nio.file.Files.createTempDirectory("chain-shape-")
+      .resolve("t").toString
+    df.write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  /** Every message along the cause chain of what `run` throws. */
+  private def failureOf(run: => Any): String = {
+    val e = intercept[Exception](run)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+  }
+
+  test("a message with bounce = true fails the chain classify, " +
+      "naming the column") {
+    val msgs = reread(msgDf.withColumn("bounce", col("msg_hash") === "mc1"))
+    val msg = failureOf(ClassifyJob.runProjected(spark, txDf, msgs,
+      ClassifyDims(), cols, ClassifyJob.Chain).collect())
+    assert(msg.contains("column 'bounce'"), msg)
+  }
+
+  test("a transaction with aborted = true fails the chain classify, " +
+      "naming the column") {
+    val txs = reread(txDf.withColumn("aborted",
+      when(col("hash") === "TB1", true).otherwise(false)))
+    val msg = failureOf(ClassifyJob.runProjected(spark, txs, msgDf,
+      ClassifyDims(), cols, ClassifyJob.Chain).collect())
+    assert(msg.contains("column 'aborted'"), msg)
+  }
+
+  test("a messages frame carrying init_state is rejected when the " +
+      "chain classify is built") {
+    val msgs = msgDf.withColumn("init_state", lit("te6cc"))
+    val e = intercept[IllegalArgumentException](
+      ClassifyJob.runProjected(spark, txDf, msgs, ClassifyDims(), cols,
+        ClassifyJob.Chain))
+    assert(e.getMessage.contains("'init_state'"), e.getMessage)
+  }
+
+  test("ChainSim.classified equals the wide classify over the same " +
+      "simulate/assembled silvers") {
+    val chain = ChainSim.classified(spark, sf)
+    val (_, msgs) = ChainSim.simulate(spark, sf)
+    val (_, _, txsWithTrace) = ChainSim.assembled(spark, sf)
+    val projected = chain.columns.filterNot(_ == "trace_end_utime").toSeq
+    val wide = ClassifyJob.runProjected(spark, txsWithTrace, msgs,
+      ClassifyDims(), projected)
+    val (w, n) = (rowsOf(wide), rowsOf(chain.select(projected.map(col): _*)))
+    assert(w.nonEmpty, "sf0.001 must classify at least one action")
+    assert(n == w, s"ChainSim.classified diverged from the wide path:\n" +
+      s"only wide=${w -- n}\nonly chain=${n -- w}")
   }
 }

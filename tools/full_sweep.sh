@@ -1,5 +1,5 @@
 #!/bin/bash
-# Full scaling sweep at one commit: 3x sf0.1 + 3x sf1 + decode share.
+# Full scaling sweep at one commit: 3x sf0.1 + 3x sf1 + the dup counterfactual.
 # Outputs land in bench_runs/; run from a quiet machine, never edit
 # src/main while this is running (each sbt invocation recompiles).
 # Bench prints only a SHORT stdout line (driver tail-capture contract);
@@ -28,8 +28,6 @@ for i in 1 2 3; do
     sbt -batch "runMain graft.Bench" >/dev/null 2>&1
   echo "=== sf1 run $i done: $(date)"
 done
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.DecodeShareBench /tmp/sf1" 2>/dev/null \
-  | grep '"metric"' | sed 's/^\[info\] //' > bench_runs/decode_share_sf1.json
 # standing dup-heavy counterfactual (r14 verdict item 6): the recombined
 # driver fixture has no verbatim dups, so the contracted reports' win
 # only shows on this synthetic 10x-dup corpus — commit it per round

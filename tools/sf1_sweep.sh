@@ -5,6 +5,4 @@ for i in 1 2 3; do
     | grep '"metric"' | sed 's/^\[info\] //' > bench_runs/sf1_run$i.json
   echo "=== sf1 run $i done: $(date)"
 done
-SPARK_GRAFT_CPUS=32 sbt -batch "runMain graft.DecodeShareBench /tmp/sf1" 2>/dev/null \
-  | grep '"metric"' | sed 's/^\[info\] //' > bench_runs/decode_share_sf1.json
 echo "=== SWEEP COMPLETE: $(date)"
