@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession every main and spec runs on, so the run
   * checked for correctness (Verify, the specs) and the runs that are
-  * timed (Bench, BenchOne, the one-off benches) share one configuration.
+  * timed (Bench, BenchOne, DupBench) share one configuration.
   * The only input is the core count.
   */
 object GraftSession {

@@ -26,19 +26,30 @@ object ChainSim {
   // a Parquet silver table and re-read (SilverStore), exactly as a
   // cluster deployment materializes its silver layer at ingest.
 
-  /** Shared base projection: events + per-user chain lag + account —
-    * one materialization reused by both the standard and the protocol
-    * simulation (they differ only in opcode mapping). */
+  /** Shared base projection: events + per-user chain lag, chain position
+    * and account — one materialization every simulated chain reads. */
   private def chainedEvents(spark: SparkSession, dir: String): DataFrame =
     SilverStore.table(spark, dir, "chained_events") {
       val w = Window.partitionBy("user_id").orderBy("event_id")
       T.events(spark, dir)
         .withColumn("prev_id", lag(col("event_id"), 1).over(w))
+        .withColumn("pos", row_number().over(w))
         .withColumn("acct", concat(lit("0:"), col("user_id").cast("string")))
     }
 
   def simulate(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    lazy val built = simulateUncached(spark, dir)
+    // signup deploys (uninit → active); click/view/error are contract
+    // calls 1/2/3; transfers (purchase/signup) carry a REAL text-comment
+    // BOC body, op 0 + "note <event_id>", decoded back by the classifier (F5)
+    lazy val built = chainSim(spark, dir, _ => col("acct"),
+      when(col("event_type") === "signup", "uninit").otherwise("active"),
+      when(col("event_type") === "click", 1L)
+        .when(col("event_type") === "view", 2L)
+        .when(col("event_type") === "error", 3L)
+        .otherwise(lit(null).cast("long")),
+      Some(when(col("event_type").isin("purchase", "signup"),
+        commentBocUdf(concat(lit("note "), col("event_id").cast("string"))))
+        .otherwise(lit(null).cast("string"))))
     (SilverStore.table(spark, dir, "sim_txs")(built._1),
       SilverStore.table(spark, dir, "sim_msgs")(
         // decode-once-at-write: persist the resolver address keys next
@@ -140,38 +151,34 @@ object ChainSim {
   }
 
   /** events → (transactions, messages) in the blockchain schema subset the
-    * assembler/classifier consume. */
-  private def simulateUncached(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
+    * assembler/classifier consume: the one simulator every chain comes
+    * from. One tx per event on `accountOf(event_id)`; one message per
+    * event, consumed by its tx and (when the event has a parent) produced
+    * by the parent's tx, from `accountOf(prev_id)`. The chains differ only
+    * in the account mapping, the orig_status, the opcode and the body.
+    *
+    * One scan and one opcode/body evaluation per event (see
+    * explodeInOutMsgs). A bodied chain spreads that stage explicitly:
+    * chained_events is a KB-scale parquet (one scan split), so the
+    * per-message body UDF — and, for persisted messages, the body_keys
+    * decode — would otherwise run on one core. The stage's cost is
+    * CPU-per-row, not bytes, so its width is pinned to the configured
+    * shuffle parallelism (an explicit N is exempt from AQE coalescing).
+    * Body-less chains skip the exchange. */
+  private def chainSim(spark: SparkSession, dir: String,
+      accountOf: Column => Column, origStatus: Column, opcode: Column,
+      body: Option[Column]): (DataFrame, DataFrame) = {
     val ev = chainedEvents(spark, dir)
-
-    val txs = chainTxs(ev, col("acct"),
-      when(col("event_type") === "signup", "uninit").otherwise("active"))
-
-    val opcode = when(col("event_type") === "click", 1L)
-      .when(col("event_type") === "view", 2L)
-      .when(col("event_type") === "error", 3L)
-      .otherwise(lit(null).cast("long"))
-
-    // transfers (purchase/signup) carry a REAL text-comment BOC body:
-    // op 0 + "note <event_id>" — decoded back by the classifier (F5)
-    val body = when(col("event_type").isin("purchase", "signup"),
-      commentBocUdf(concat(lit("note "), col("event_id").cast("string"))))
-      .otherwise(lit(null).cast("string"))
-
-    // one scan + one comment-BOC build per event (r17 — see
-    // explodeInOutMsgs); bodyOnOut = false keeps the out copy body-less
-    // (only IN-message bodies are ever decoded — Seeder reads the
-    // consuming side). The repartition spreads the comment-BOC build and
-    // the sim_msgs body_keys decode across the configured parallelism —
-    // chained_events is a KB-scale parquet (one scan split), so without
-    // it the whole synthesis stage runs on one core (see protocolSim).
-    (txs, explodeInOutMsgs(ev
-      .repartition(spark.sessionState.conf.numShufflePartitions,
-        col("event_id"))
-      .select(
+    val spread =
+      if (body.isEmpty) ev
+      else ev.repartition(
+        spark.sessionState.conf.numShufflePartitions, col("event_id"))
+    (chainTxs(ev, accountOf(col("event_id")), origStatus),
+      explodeInOutMsgs(spread.select(
         col("event_id"), col("prev_id"), col("value"),
-        col("acct").as("dest"), col("acct").as("src"),
-        opcode.as("op"), body.as("b")), bodyOnOut = false))
+        accountOf(col("event_id")).as("dest"),
+        accountOf(col("prev_id")).as("src"),
+        opcode.as("op"), body.getOrElse(lit(null).cast("string")).as("b"))))
   }
 
   /** Full pipeline stage 1: trace assembly over the simulated chain.
@@ -219,48 +226,6 @@ object ChainSim {
   // ------------------------------------------------- protocol-opcode chain
 
 
-  /** Same chain topology, but event types map to REAL protocol opcodes so
-    * the protocol matcher registry is exercised through the driver gate:
-    * click → StonFi swap 0x25938561, view → StonFi payment 0xf93bb43f
-    * (a click immediately followed by a view in the user's chain is a
-    * swap→payment parent/child edge ⇒ one jetton_swap action),
-    * purchase → TONStakers deposit 0x47d54391 (stake_deposit),
-    * signup → multisig new-order 0xf718510f (multisig_create_order),
-    * error → DNS change-record 0x4eb1f0f9 (change_dns). */
-  private def protocolSim(spark: SparkSession, dir: String,
-      opcodeOf: Column,
-      bodyOf: Option[Column] = None): (DataFrame, DataFrame) = {
-    val ev0 = chainedEvents(spark, dir).withColumn("pos",
-      row_number().over(Window.partitionBy("user_id").orderBy("event_id")))
-    // BODIED variants: spread the BOC-synthesis stage explicitly. AQE
-    // coalesces the pos-window's shuffle read by BYTES, and a KB-scale
-    // sim collapses to ONE partition — which serializes the per-message
-    // body UDF (and, for persisted variants, the body_keys decode) onto
-    // a single core. The stage's cost is CPU-per-row, not bytes, so pin
-    // its width to the configured shuffle parallelism (cpus locally;
-    // sized to the cluster in a deployment — an explicit N is exempt
-    // from AQE coalescing). Body-less variants skip the exchange.
-    val ev =
-      if (bodyOf.isEmpty) ev0
-      else ev0.repartition(
-        spark.sessionState.conf.numShufflePartitions, col("event_id"))
-    val body = bodyOf.getOrElse(lit(null).cast("string"))
-    val txs = chainTxs(ev0, col("acct"), lit("active"))
-    // ONE scan + ONE body/opcode evaluation per event (r17, guide §6/§4):
-    // the previous in/out unionByName was two scans of chained_events,
-    // each paying the pos-window AND the per-message BOC body-synthesis
-    // UDF — the body built TWICE per event (measured 1.5-2.0 s of each
-    // bodied variant's classify stage at sf0.1 vs 0.33 s body-less).
-    // Here body/opcode are computed in their own projection (CollapseProject
-    // will not inline a non-cheap expression referenced by both structs)
-    // and the in/out copies explode from the same row. Within-group msg
-    // order is free — TxTree.build sorts by (lt, account)/seqNo/createdLt.
-    (txs, explodeInOutMsgs(ev.select(
-      col("event_id"), col("prev_id"), col("value"),
-      col("acct").as("dest"), col("acct").as("src"),
-      opcodeOf.as("op"), body.as("b"))))
-  }
-
   /** One transaction per event of `ev`: the chain columns every
     * simulation shares, the given account and orig_status, and the chain
     * constants that ClassifyJob.Chain checks and re-injects. */
@@ -278,34 +243,34 @@ object ChainSim {
   /** (event_id, prev_id, value, dest, src, op, b) → the message frame:
     * every event's in-copy, plus — when the event has a parent — the
     * out-copy attached to the parent tx, both sharing the ONE computed
-    * body/opcode. `src` is the source an event with a parent reports
-    * (the in-copy of a root keeps source NULL). Row set identical to
-    * the former inMsgs.unionByName(outMsgs) two-scan form.
+    * opcode. `src` is the source an event with a parent reports (the
+    * in-copy of a root keeps source NULL). Only the in-copy carries the
+    * body: every reader of a body reads the consuming side (the TxTree
+    * matchers read the node's inMsg, SilverLayer.actionBalanceChanges
+    * filters direction = 'in', and ClassifyJob.traceDims finds the same
+    * keys per trace in each event's in-copy). Row set identical to the
+    * former inMsgs.unionByName(outMsgs) two-scan form.
     *
     * Layout matters (measured): the copy-INVARIANT columns — above all
     * the UDF-synthesized body — stay TOP-LEVEL in the Generate's child,
-    * and only the tiny per-copy (tx_hash, direction, source, has_body)
-    * struct explodes. Packing body inside the exploded structs defeated
-    * column pruning (nested-field pruning does not reach through the
+    * and only the tiny per-copy (tx_hash, direction, source) struct
+    * explodes. Packing body inside the exploded structs defeated column
+    * pruning (nested-field pruning does not reach through the
     * CaseWhen-of-arrays generator input), so body-LESS consumers — the
     * dims candidate branch, count probes — paid the full BOC synthesis:
     * the body-less msgs scan measured 1.60 s that way vs 0.33 s with the
     * body as a prunable top-level column. */
-  private def explodeInOutMsgs(withCols: DataFrame,
-      bodyOnOut: Boolean = true): DataFrame = {
-    def copyStruct(dirLit: String, txCol: Column, srcCol: Column,
-        hasBody: Boolean): Column =
+  private def explodeInOutMsgs(withCols: DataFrame): DataFrame = {
+    def copyStruct(dirLit: String, txCol: Column, srcCol: Column): Column =
       struct(txCol.as("tx_hash"), lit(dirLit).as("direction"),
-        srcCol.as("source"), lit(hasBody).as("has_body"))
+        srcCol.as("source"))
     val inS = copyStruct("in",
       concat(lit("T"), col("event_id").cast("string")),
       when(col("prev_id").isNull, lit(null).cast("string"))
-        .otherwise(col("src")),
-      hasBody = true)
+        .otherwise(col("src")))
     val outS = copyStruct("out",
       concat(lit("T"), col("prev_id").cast("string")),
-      col("src"),
-      hasBody = bodyOnOut)
+      col("src"))
     withCols
       .select(Seq(
         concat(lit("m"), col("event_id").cast("string")).as("msg_hash"),
@@ -321,23 +286,24 @@ object ChainSim {
         col("m.direction").as("direction"), col("m.source").as("source"),
         col("destination"), col("value"), col("opcode"),
         col("bounce"), col("bounced"), col("created_lt"),
-        when(col("m.has_body"), col("body0")).as("body"))
+        when(col("m.direction") === "in", col("body0")).as("body"))
   }
 
   /** Columns every protocol-variant query reads. */
   private val protoBaseCols = Seq("trace_id", "type", "start_lt", "end_lt",
     "source", "destination", "success")
 
+  /** One protocol variant through the full pipeline: the standard chain's
+    * accounts, every tx `active`, the variant's opcodes and bodies. */
   private def protocolClassified(spark: SparkSession, dir: String,
       variant: String, opcodeOf: => Column,
-      // None = body-less variant: drives protocolSim's bodied-stage
-      // repartition
       bodyOf: => Option[Column] = None,
       dims: => graft.classifier.ClassifyDims = graft.classifier.ClassifyDims(),
-      keep: Seq[String] = Nil,
-      persistMsgs: Boolean = false): DataFrame =
+      keep: Seq[String] = Nil): DataFrame =
     SilverStore.table(spark, dir, s"proto_$variant") {
-      val (txs, msgs0) = protocolSim(spark, dir, opcodeOf, bodyOf)
+      val body = bodyOf
+      val (txs, msgs0) = chainSim(spark, dir, _ => col("acct"), lit("active"),
+        opcodeOf, body)
       val d = dims
       // BODIED dims variants evaluate the messages frame TWICE (the
       // classify branch and the traceDims branch) — including the
@@ -347,33 +313,37 @@ object ChainSim {
       // sim_msgs pattern): bodies build once, the decode runs once at
       // write, and the dims branch reads a narrow array column instead
       // of re-parsing BOCs (r16; ClassifyJob.traceDims consumes
-      // body_keys when present). Opt-in per variant: for body-less
-      // variants (b19) and dim-less variants the silver write is pure
-      // added IO — measured a small net LOSS at sf0.1 when applied to
-      // b19 — so only bodied dims variants (b15) pass persistMsgs.
+      // body_keys when present). A variant without a body or without
+      // dims reads its messages once, so the silver write would be pure
+      // added IO (measured a small net LOSS at sf0.1 when applied to the
+      // body-less b19).
       val msgs =
-        if (!persistMsgs || d.isEmpty) msgs0
+        if (body.isEmpty || d.isEmpty) msgs0
         else SilverStore.table(spark, dir, s"proto_${variant}_msgs")(
           msgs0.withColumn("body_keys",
             ClassifyJob.bodyKeysCol(col("opcode"), col("body"))))
-      val (_, _, txsWithTrace) =
-        TraceAssembly.assemble(txs, msgs0, Some(chainRoots(spark, dir)))
-      // txsWithTrace = txs ⋈ roots — both identical across every
-      // protocol variant (only the MESSAGE opcodes/bodies differ), so
-      // one shared silver table serves all ~11 variant pipelines
-      // instead of a write+read per variant
+      // txs ⋈ roots — identical across every protocol variant (only the
+      // MESSAGE opcodes/bodies differ), so one shared silver table serves
+      // all ~11 variant pipelines instead of a write+read per variant
       val txw = SilverStore.table(spark, dir, "proto_txw")(
-        txsWithTrace)
+        txs.join(chainRoots(spark, dir), Seq("hash")))
       // narrow-output classify: only the columns the variant's queries
       // read materialize through the encoder — the wide 60-field
       // ActionRow encoder was measured at HALF the classify cost.
-      // protocolSim writes the chain constants: the narrow Chain row
+      // chainSim writes the chain constants: the narrow Chain row
       // applies, and checks them
       ClassifyJob.runProjected(spark, txw, msgs, d,
         (protoBaseCols ++ keep).distinct, ClassifyJob.Chain)
     }
 
-  /** b06 opcode mapping (see protocolSim doc). */
+  /** b06 opcode mapping: event types map to REAL protocol opcodes so
+    * the protocol matcher registry is exercised through the oracle gate:
+    * click → StonFi swap 0x25938561, view → StonFi payment 0xf93bb43f
+    * (a click immediately followed by a view in the user's chain is a
+    * swap→payment parent/child edge ⇒ one jetton_swap action),
+    * purchase → TONStakers deposit 0x47d54391 (stake_deposit),
+    * signup → multisig new-order 0xf718510f (multisig_create_order),
+    * error → DNS change-record 0x4eb1f0f9 (change_dns). */
   private def b06Opcodes: Column =
     when(col("event_type") === "click",
         lit(graft.classifier.Opcodes.StonfiSwap))
@@ -1013,7 +983,7 @@ object ChainSim {
       |ORDER BY swap_lt, hop""".stripMargin) { (s, dir) =>
     protocolClassified(s, dir, "b15", b15Opcodes, Some(b15Bodies),
       graft.classifier.ClassifyDims(jettonWallets = Some(b15WalletDim(s, dir))),
-      keep = Seq("jetton_swap_data"), persistMsgs = true)
+      keep = Seq("jetton_swap_data"))
       .filter(col("type") === "jetton_swap")
       .select(col("trace_id"), col("start_lt").as("swap_lt"),
         posexplode(col("jetton_swap_data.peer_swaps")))
@@ -1028,11 +998,26 @@ object ChainSim {
 
   // ------------------------------------- per-action balance changes (b16)
 
-  /** b16 sim — like protocolSim but with CROSS-ACCOUNT edges (tx account
+  /** b16 chain — the protocol chain with CROSS-ACCOUNT edges (tx account
     * alternates by event-id parity) so value actually moves between
     * accounts: click → StonFi swap, view → payment (2-tx jetton_swap),
     * purchase → TEP-74 jetton transfer with a real body, signup →
     * internal_transfer (2-tx jetton_transfer). */
+  private def b16Account(eventId: Column): Column =
+    concat(pmod(eventId, lit(2)).cast("string"), lit(":"),
+      col("user_id").cast("string"))
+
+  private def b16Opcodes: Column =
+    when(col("event_type") === "click",
+        lit(graft.classifier.Opcodes.StonfiSwap))
+      .when(col("event_type") === "view",
+        lit(graft.classifier.Opcodes.StonfiPayment))
+      .when(col("event_type") === "purchase",
+        lit(graft.classifier.Opcodes.JettonTransfer))
+      .when(col("event_type") === "signup",
+        lit(graft.classifier.Opcodes.JettonInternalTransfer))
+      .otherwise(lit(1L))
+
   private def b16JettonBodyUdf = udf { (eventId: Long, userId: Long) =>
     import graft.functions.Boc
     Boc.serializeBase64(new Boc.Builder()
@@ -1047,62 +1032,33 @@ object ChainSim {
       .build())
   }
 
+  private def b16Bodies: Column =
+    when(col("event_type") === "purchase",
+      b16JettonBodyUdf(col("event_id").cast("long"),
+        col("user_id").cast("long")))
+      .otherwise(lit(null).cast("string"))
+
   /** b16 silver tables: txw and msgs persist first; the classify pass
-    * reads them back, so assembly runs once and the classifier consumes
-    * the columnar silver files. */
+    * reads them back, so the classifier consumes the columnar silver
+    * files. */
   private def b16Parts(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) = {
-    lazy val built = b16Build(spark, dir)
-    val txw = SilverStore.table(spark, dir, "b16_txw")(built._1)
+    lazy val built = chainSim(spark, dir, b16Account, lit("active"),
+      b16Opcodes, Some(b16Bodies))
+    val txw = SilverStore.table(spark, dir, "b16_txw")(
+      built._1.join(chainRoots(spark, dir), Seq("hash")))
     val msgs = SilverStore.table(spark, dir, "b16_msgs")(built._2)
     // narrow-output classify: only these 4 columns materialize through
     // the encoder — the full 60-field ActionRow encoder measured 2× on
     // the sweep
     val acts = SilverStore.table(spark, dir, "b16_acts")(
-      // b16Build writes the chain constants (chainTxs)
+      // chainSim writes the chain constants (chainTxs)
       ClassifyJob.runProjected(spark, txw, msgs,
         graft.classifier.ClassifyDims(),
         Seq("trace_id", "start_lt", "type", "tx_hashes"),
         ClassifyJob.Chain))
     (acts, txw, msgs)
   }
-
-  private def b16Build(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-      val ev = chainedEvents(spark, dir)
-      def acctOf(id: Column) = concat(pmod(id, lit(2)).cast("string"),
-        lit(":"), col("user_id").cast("string"))
-      val opcode =
-        when(col("event_type") === "click",
-            lit(graft.classifier.Opcodes.StonfiSwap))
-          .when(col("event_type") === "view",
-            lit(graft.classifier.Opcodes.StonfiPayment))
-          .when(col("event_type") === "purchase",
-            lit(graft.classifier.Opcodes.JettonTransfer))
-          .when(col("event_type") === "signup",
-            lit(graft.classifier.Opcodes.JettonInternalTransfer))
-          .otherwise(lit(1L))
-      val body = when(col("event_type") === "purchase",
-        b16JettonBodyUdf(col("event_id").cast("long"),
-          col("user_id").cast("long")))
-        .otherwise(lit(null).cast("string"))
-      val txs = chainTxs(ev, acctOf(col("event_id")), lit("active"))
-      // one scan + one jetton-BOC build per event (r17 — see
-      // explodeInOutMsgs); b16's endpoints are parity accounts, so dest/
-      // src are the acctOf projections of this/parent event; the
-      // repartition spreads the jetton-BOC build (see protocolSim)
-      val msgs = explodeInOutMsgs(ev
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          col("event_id"))
-        .select(
-          col("event_id"), col("prev_id"), col("value"),
-          acctOf(col("event_id")).as("dest"),
-          acctOf(col("prev_id")).as("src"),
-          opcode.as("op"), body.as("b")))
-      val (_, _, txsWithTrace) =
-        TraceAssembly.assemble(txs, msgs, Some(chainRoots(spark, dir)))
-      (txsWithTrace, msgs)
-    }
 
   /** Per-action (account, asset, delta) rows. Action tx_hashes carry the
     * INITIATING tx (block_tree_serializer.py:1469-1478), and the balance
@@ -1429,6 +1385,31 @@ object ChainSim {
       .orderBy("start_lt")
   }
 
+  /** One Decode.decode round trip per `eventType` event over the body
+    * `body(user_id, event_id)` builds: (lt, op_name, query_id, amount =
+    * the first present of `amountKeys`, addr = the first present of
+    * `addrKeys`, fields = the decoded field map). */
+  private def decodeRoundTrip(s: SparkSession, dir: String, eventType: String,
+      amountKeys: Seq[String], addrKeys: Seq[String])(
+      body: (Long, Long) => String): DataFrame = {
+    val bodyUdf = udf(body)
+    val decUdf = udf { (b64: String) =>
+      graft.functions.Decode.decode(b64).map(d => (d.name, d.fields))
+    }
+    def firstOf(keys: Seq[String]): Column =
+      coalesce(keys.map(k => element_at(col("d._2"), k)): _*)
+    T.events(s, dir)
+      .filter(col("event_type") === eventType)
+      .select(col("event_id").cast("long").as("lt"),
+        decUdf(bodyUdf(col("user_id").cast("long"),
+          col("event_id").cast("long"))).as("d"))
+      .select(col("lt"),
+        col("d._1").as("op_name"),
+        element_at(col("d._2"), "query_id").as("query_id"),
+        firstOf(amountKeys).as("amount"), firstOf(addrKeys).as("addr"),
+        col("d._2").as("fields"))
+  }
+
   /** F5 standalone decode surface (GET/POST /api/v3/decode,
     * ton-index-go/main.go:1897-1978): bodies built by the engine's BOC
     * writer for five opcode families are dispatched through
@@ -1454,7 +1435,9 @@ object ChainSim {
       |    THEN concat('note ', event_id) END AS text
       |FROM events WHERE event_type = 'purchase'
       |ORDER BY lt""".stripMargin) { (s, dir) =>
-    val bodyUdf = udf { (uid: Long, eid: Long) =>
+    decodeRoundTrip(s, dir, "purchase",
+        amountKeys = Seq("amount"),
+        addrKeys = Seq("destination", "new_owner")) { (uid, eid) =>
       import graft.functions.Boc
       val ch = "0123456789ABCDEF"((uid % 16).toInt)
       val addr = s"0:${ch.toString * 64}"
@@ -1477,24 +1460,8 @@ object ChainSim {
           .storeBytes(s"note $eid".getBytes("UTF-8"))
       }
       Boc.serializeBase64(b.build())
-    }
-    val decUdf = udf { (b64: String) =>
-      graft.functions.Decode.decode(b64).map(d => (d.name, d.fields))
-    }
-    T.events(s, dir)
-      .filter(col("event_type") === "purchase")
-      .select(col("event_id").cast("long").as("lt"),
-        pmod(col("user_id"), lit(5)).cast("int").as("cls"),
-        decUdf(bodyUdf(col("user_id").cast("long"),
-          col("event_id").cast("long"))).as("d"))
-      .select(col("lt"),
-        col("d._1").as("op_name"),
-        element_at(col("d._2"), "query_id").as("query_id"),
-        element_at(col("d._2"), "amount").as("amount"),
-        when(col("cls") === 0, element_at(col("d._2"), "destination"))
-          .when(col("cls") === 2, element_at(col("d._2"), "new_owner"))
-          .as("dest"),
-        element_at(col("d._2"), "text").as("text"))
+    }.select(col("lt"), col("op_name"), col("query_id"), col("amount"),
+        col("addr").as("dest"), element_at(col("fields"), "text").as("text"))
       .orderBy("lt")
   }
 
@@ -1522,7 +1489,11 @@ object ChainSim {
       |                cast(user_id % 16 AS int) + 1, 1), 64)) AS addr
       |FROM events WHERE event_type = 'signup'
       |ORDER BY lt""".stripMargin) { (s, dir) =>
-    val bodyUdf = udf { (uid: Long, eid: Long) =>
+    decodeRoundTrip(s, dir, "signup",
+        amountKeys = Seq("supply_amount", "amount0",
+          "top_up_amount", "output_amount", "amount"),
+        addrKeys = Seq("recipient_address", "jetton0_address",
+          "recipient", "send_excesses_to", "input_asset")) { (uid, eid) =>
       import graft.functions.Boc
       val ch = "0123456789ABCDEF"((uid % 16).toInt)
       val addr = s"0:${ch.toString * 64}"
@@ -1553,32 +1524,7 @@ object ChainSim {
             .storeCoins(BigInt(eid)).storeCoins(BigInt(eid * 5))
       }
       Boc.serializeBase64(b.build())
-    }
-    val decUdf = udf { (b64: String) =>
-      graft.functions.Decode.decode(b64).map(d => (d.name, d.fields))
-    }
-    T.events(s, dir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id").cast("long").as("lt"),
-        pmod(col("user_id"), lit(5)).cast("int").as("cls"),
-        decUdf(bodyUdf(col("user_id").cast("long"),
-          col("event_id").cast("long"))).as("d"))
-      .select(col("lt"),
-        col("d._1").as("op_name"),
-        element_at(col("d._2"), "query_id").as("query_id"),
-        coalesce(
-          element_at(col("d._2"), "supply_amount"),
-          element_at(col("d._2"), "amount0"),
-          element_at(col("d._2"), "top_up_amount"),
-          element_at(col("d._2"), "output_amount"),
-          element_at(col("d._2"), "amount")).as("amount"),
-        coalesce(
-          element_at(col("d._2"), "recipient_address"),
-          element_at(col("d._2"), "jetton0_address"),
-          element_at(col("d._2"), "recipient"),
-          element_at(col("d._2"), "send_excesses_to"),
-          element_at(col("d._2"), "input_asset")).as("addr"))
-      .orderBy("lt")
+    }.drop("fields").orderBy("lt")
   }
 
   /** Second decode-tranche oracle: ten of the round-9 decoder families
@@ -1622,7 +1568,13 @@ object ChainSim {
       |      cast(user_id % 16 AS int) + 1, 1), 64)) END AS addr
       |FROM events WHERE event_type = 'signup'
       |ORDER BY lt""".stripMargin) { (s, dir) =>
-    val bodyUdf = udf { (uid: Long, eid: Long) =>
+    decodeRoundTrip(s, dir, "signup",
+        amountKeys = Seq("liquidate_incoming_amount",
+          "principal_amount", "lp_fee_current", "liquidity_to_burn",
+          "jetton_amount", "min_client_stake", "new_full_price", "proxy_part",
+          "supply_amount_current", "amount"),
+        addrKeys = Seq("borrower_address", "recipient", "asset",
+          "sender", "send_excesses_to", "asset_id")) { (uid, eid) =>
       import graft.functions.Boc
       val ch = "0123456789ABCDEF"((uid % 16).toInt)
       val addr = s"0:${ch.toString * 64}"
@@ -1678,37 +1630,7 @@ object ChainSim {
             .storeUint(BigInt(uid), 256).storeUint(BigInt(eid * 7), 64)
       }
       Boc.serializeBase64(b.build())
-    }
-    val decUdf = udf { (b64: String) =>
-      graft.functions.Decode.decode(b64).map(d => (d.name, d.fields))
-    }
-    T.events(s, dir)
-      .filter(col("event_type") === "signup")
-      .select(col("event_id").cast("long").as("lt"),
-        decUdf(bodyUdf(col("user_id").cast("long"),
-          col("event_id").cast("long"))).as("d"))
-      .select(col("lt"),
-        col("d._1").as("op_name"),
-        element_at(col("d._2"), "query_id").as("query_id"),
-        coalesce(
-          element_at(col("d._2"), "liquidate_incoming_amount"),
-          element_at(col("d._2"), "principal_amount"),
-          element_at(col("d._2"), "lp_fee_current"),
-          element_at(col("d._2"), "liquidity_to_burn"),
-          element_at(col("d._2"), "jetton_amount"),
-          element_at(col("d._2"), "min_client_stake"),
-          element_at(col("d._2"), "new_full_price"),
-          element_at(col("d._2"), "proxy_part"),
-          element_at(col("d._2"), "supply_amount_current"),
-          element_at(col("d._2"), "amount")).as("amount"),
-        coalesce(
-          element_at(col("d._2"), "borrower_address"),
-          element_at(col("d._2"), "recipient"),
-          element_at(col("d._2"), "asset"),
-          element_at(col("d._2"), "sender"),
-          element_at(col("d._2"), "send_excesses_to"),
-          element_at(col("d._2"), "asset_id")).as("addr"))
-      .orderBy("lt")
+    }.drop("fields").orderBy("lt")
   }
 
   /** Post-classify traces writeback: classification_state moves off its

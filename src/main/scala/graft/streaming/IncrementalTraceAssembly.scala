@@ -25,8 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * The open set is bounded by in-flight trace size, not by history —
   * the reference bounds the same state with its 50-block backtrack.
-  * State snapshots go to `checkpointDir` as parquet (the .tastate
-  * analogue); `restore()` resumes after a crash.
+  * With a `checkpointDir`, each batch's carried state is snapshotted as
+  * parquet under its batch id (the .tastate analogue); an assembler
+  * started over the same dir resumes batch N from batch N-1's snapshot.
   */
 class IncrementalTraceAssembly(spark: SparkSession,
     checkpointDir: Option[String] = None) {
@@ -73,8 +74,8 @@ class IncrementalTraceAssembly(spark: SparkSession,
   /** As processBatch, but also returns the completed traces' transaction
     * rows (with trace_id) and messages — the classification feed of the
     * end-to-end pipeline (StreamPipeline). Pass the streaming `batchId`
-    * to get batch-keyed snapshots (replay-safe); batchId = -1 keeps the
-    * legacy unkeyed snapshot behavior.
+    * to get batch-keyed snapshots (replay-safe); batchId = -1 runs the
+    * batch on the in-memory state alone and snapshots nothing.
     *
     * Lifetime contract: the returned frames are filters over this batch's
     * local checkpoints (no lineage into earlier batches or into the input
@@ -127,7 +128,7 @@ class IncrementalTraceAssembly(spark: SparkSession,
         prune(dir, batchId)
       }
       lastBatchId = Some(batchId)
-    } else checkpointDir.foreach(snapshot(_, carryTxs, carryMsgs))
+    }
     // nothing reads the unioned inputs or the assembler's frames once the
     // tagged checkpoints exist; releasing traces/txsWithTrace also frees
     // the assembler's internal fixpoint checkpoints (if any)
@@ -152,15 +153,6 @@ class IncrementalTraceAssembly(spark: SparkSession,
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(path)) fs.delete(path, true)
     }
-  }
-
-  /** Restore the open set after restart. */
-  def restore(): Boolean = checkpointDir.exists { dir =>
-    try {
-      openTxs = Some(spark.read.parquet(s"$dir/open_txs"))
-      openMsgs = Some(spark.read.parquet(s"$dir/open_msgs"))
-      true
-    } catch { case _: Exception => false }
   }
 
   /** Traces still open (pending/broken) at the current point. */

@@ -1,8 +1,7 @@
 package graft
 
 import graft.plans.GraphOps
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.GroupJobCount
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -112,22 +111,11 @@ class GraphOpsSpec extends SparkSpec {
     // a distributed input over 4 partitions, not a local relation
     val nodes = spark.range(1, n + 1, 1, 4).select(col("id"),
       when(col("id") > 1, col("id") - 1).as("parent"))
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val (resolved, jobs) = GroupJobCount(spark.sparkContext) {
+      GraphOps.forestRoots(nodes)
     }
-    sc.addSparkListener(listener)
-    val resolved = try {
-      val r = GraphOps.forestRoots(nodes)
-      ListenerBusDrain(sc)
-      r
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 2,
-      s"resolving one forest ran ${jobs.get()} jobs: per-round jobs are back")
+    assert(jobs <= 2,
+      s"resolving one forest ran $jobs jobs: per-round jobs are back")
     assert(resolved.filter(col("root") =!= 1L).count() == 0)
     assert(resolved.count() == n)
   }

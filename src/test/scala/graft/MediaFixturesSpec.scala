@@ -77,24 +77,15 @@ class MediaFixturesSpec extends SparkSpec {
     // simulate a fresh session: drop the in-process memo; the warm hit
     // must validate from the stamp alone — no generator, no Spark jobs
     graft.plans.MediaFixtures.clearValidationMemo()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    val (_, jobs) = org.apache.spark.GroupJobCount(spark.sparkContext) {
       graft.plans.MediaFixtures.table(spark, dir.toString, name, 1)(
         sys.error("warm stamped hit must not invoke the generator"))
-      Thread.sleep(1500) // listener bus is async; let events drain
-      // the single allowed job is the returned table's own parquet
-      // footer/schema read — paid by EVERY table() call regardless of
-      // validation; the probe path would add two aggregate jobs on top
-      assert(jobs.get() <= 1,
-        s"stamped warm hit must run zero validation jobs (ran ${jobs.get()})")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    // the single allowed job is the returned table's own parquet
+    // footer/schema read — paid by EVERY table() call regardless of
+    // validation; the probe path would add two aggregate jobs on top
+    assert(jobs <= 1,
+      s"stamped warm hit must run zero validation jobs (ran $jobs)")
 
     // corrupt the stamp: the probe path must engage (Spark jobs), pass
     // (the payload still matches), and rewrite the stamp

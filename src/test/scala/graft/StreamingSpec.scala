@@ -90,8 +90,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("one steady-state micro-batch of the assembler stays within its job budget") {
-    import org.apache.spark.ListenerBusDrain
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.GroupJobCount
     val inc = new IncrementalTraceAssembly(spark)
     // batch 1 leaves T1's trace open (m2 unconsumed), so batch 2 unions
     // a carried open set with new rows, the steady state of a stream
@@ -101,23 +100,12 @@ class StreamingSpec extends SparkSpec {
     val txs2 = txDf("T2" -> 20L, "T3" -> 30L)
     val msgs2 = msgDf(("m2", "T2", "in", "0:T1", "0:T2"),
       ("m3", "T3", "in", null, "0:T3"), ("m4", "T3", "out", "0:T3", "0:T4"))
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
+    val ((done, doneTxs, _), jobs) = GroupJobCount(spark.sparkContext) {
+      inc.processBatchFull(txs2, msgs2)
     }
-    sc.addSparkListener(listener)
-    val (done, doneTxs, _) = try {
-      val r = inc.processBatchFull(txs2, msgs2)
-      ListenerBusDrain(sc)
-      r
-    } finally sc.removeSparkListener(listener)
     // 31 measured on this fixture (five materializations per batch)
-    assert(jobs.get() <= 31,
-      s"one micro-batch ran ${jobs.get()} jobs: per-batch materializations are back")
+    assert(jobs <= 31,
+      s"one micro-batch ran $jobs jobs: per-batch materializations are back")
     assert(done.collect().map(_.getAs[String]("trace_id")).toSeq == Seq("T1"))
     assert(doneTxs.collect().map(_.getAs[String]("hash")).toSet == Set("T1", "T2"))
     assert(inc.openTraces().collect().map(_.getAs[String]("trace_id")).toSeq ==
@@ -126,14 +114,16 @@ class StreamingSpec extends SparkSpec {
 
   test("incremental assembly snapshots and restores its open set") {
     val dir = java.nio.file.Files.createTempDirectory("tastate").toString
-    val inc = new IncrementalTraceAssembly(spark, Some(dir))
-    inc.processBatch(
+    new IncrementalTraceAssembly(spark, Some(dir)).processBatchFull(
       txDf("T1" -> 10L),
-      msgDf(("m1", "T1", "in", null, "0:T1"), ("m2", "T1", "out", "0:T1", "0:T2")))
+      msgDf(("m1", "T1", "in", null, "0:T1"), ("m2", "T1", "out", "0:T1", "0:T2")),
+      batchId = 0L)
+    // a fresh assembler holds no state: batch 1 must load batch 0's
+    // snapshot to resolve T1's pending m2
     val restored = new IncrementalTraceAssembly(spark, Some(dir))
-    assert(restored.restore())
-    val done = restored.processBatch(
-      txDf("T2" -> 20L), msgDf(("m2", "T2", "in", "0:T1", "0:T2")))
+    val (done, _, _) = restored.processBatchFull(
+      txDf("T2" -> 20L), msgDf(("m2", "T2", "in", "0:T1", "0:T2")),
+      batchId = 1L)
     assert(done.collect().map(_.getAs[String]("trace_id")).toSeq == Seq("T1"))
   }
 
