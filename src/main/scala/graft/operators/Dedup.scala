@@ -1,8 +1,9 @@
 package graft.operators
 
 import graft.{Q, Tables => T}
+import graft.plans.GraphOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.GraftFreshStats.{checkpointFresh, unpersistCheckpoints}
+import org.apache.spark.sql.GraftFreshStats.unpersistCheckpoints
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -492,59 +493,16 @@ object Dedup {
   /** Duplicate CLUSTERS from a near-dup pair list: connected components
     * with the component's minimum doc_id as the canonical representative
     * — the step a training pipeline runs after pair generation (keep one
-    * doc per cluster, drop the rest). Iterative min-label contraction:
-    * each round relabels edges, derives the min-neighbor parent forest
-    * (strictly decreasing → acyclic) and FULLY compresses it with
-    * GraphOps.forestRoots, so label chains collapse in one round instead
-    * of one hop per round. Only (label, label) pairs ever shuffle; a
-    * round's parent forest of up to 3,000,000 labels resolves in one
-    * driver pass, a larger one in the shuffle fixpoint. Docs in no pair
-    * are singletons (their own canonical) and are omitted from the
-    * output. */
-  def dupClusters(pairs: DataFrame, maxRounds: Int = 15): DataFrame = {
-    // checkpointFresh (stats firewall) everywhere in this loop: labels
-    // round N feeds round N+1's joins, and a plain localCheckpoint
-    // forwards computed stats whose sizeInBytes compounds
-    // multiplicatively across rounds — see GraftFreshStats.
-    val edges = checkpointFresh(
-      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")))
-    var labels = checkpointFresh(edges.select(col("u").as("doc_id"))
-      .unionByName(edges.select(col("v").as("doc_id")))
-      .distinct().withColumn("label", col("doc_id")))
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
-      val lu = labels.select(col("doc_id").as("u"), col("label").as("lu"))
-      val lv = labels.select(col("doc_id").as("v"), col("label").as("lv"))
-      val e2 = checkpointFresh(edges.join(lu, "u").join(lv, "v")
-        .select(col("lu"), col("lv")).filter(col("lu") =!= col("lv")))
-      if (e2.isEmpty) converged = true
-      else {
-        val sym = e2.unionByName(
-          e2.select(col("lv").as("lu"), col("lu").as("lv")))
-        val parents = sym.groupBy("lu").agg(min("lv").as("m"))
-          .filter(col("m") < col("lu"))
-          .select(col("lu").as("id"), col("m").as("parent"))
-        val compressed = graft.plans.GraphOps.forestRoots(parents)
-        val prev = labels
-        labels = checkpointFresh(labels
-          .join(compressed.select(col("id").as("label"), col("root")),
-            Seq("label"), "left")
-          .select(col("doc_id"),
-            coalesce(col("root"), col("label")).as("label")))
-        // the new labels table is materialized: release the superseded
-        // round's labels and this round's relabeled-edge / fixpoint
-        // checkpoints instead of pinning them for the session
-        unpersistCheckpoints(prev)
-        unpersistCheckpoints(compressed)
-      }
-      unpersistCheckpoints(e2)
-      round += 1
-    }
-    require(converged, s"dupClusters did not converge in $maxRounds rounds")
-    unpersistCheckpoints(edges)
-    labels.select(col("doc_id"), col("label").as("canonical_id"))
-  }
+    * doc per cluster, drop the rest). Runs [[GraphOps.components]] over
+    * the bigint (doc_a, doc_b) pairs: up to `DriverResolveLimit` pairs
+    * resolve in one driver pass, more take the min-label contraction.
+    * Docs in no pair are singletons (their own canonical) and are
+    * omitted from the output. */
+  def dupClusters(pairs: DataFrame, maxRounds: Int = 15): DataFrame =
+    GraphOps.components(
+      pairs.select(col("doc_a").as("u"), col("doc_b").as("v")),
+      maxRounds, GraphOps.DriverResolveLimit)
+      .select(col("id").as("doc_id"), col("root").as("canonical_id"))
 
   // ------------------------------------------------- contracted reports
 

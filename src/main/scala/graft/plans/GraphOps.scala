@@ -1,11 +1,17 @@
 package graft.plans
 
 import graft.{Q, Tables => T}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.GraftFreshStats.{checkpointFresh, unpersistCheckpoints}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import scala.collection.immutable.ArraySeq
+import scala.collection.mutable.{ArrayBuffer, ArrayBuilder}
 
 /** Forest root resolution — the batch form of the reference's
   * incremental trace assembly (connected components over the message
@@ -20,6 +26,10 @@ import scala.collection.immutable.ArraySeq
   * forests use the shuffle fixpoint: pointer doubling over (id, anc)
   * self-joins, O(log depth) rounds, each hash-partitioned on the join key
   * under AQE, with `checkpointFresh` truncating lineage between rounds.
+  *
+  * [[components]] (duplicate clusters) has the same two branches: a
+  * union-find over the collected edges up to the same limit, a min-label
+  * contraction that nests forestRoots per round above it.
   */
 object GraphOps {
 
@@ -158,8 +168,9 @@ object GraphOps {
       // (LogicalRDD.originStats), and Catalyst's size-only stats visitor
       // multiplies join children's sizeInBytes — so the estimate
       // compounds round over round, and with an outer loop nesting
-      // forestRoots calls (d14 dupClusters) the driver ends up in
-      // Toom-Cook multiplications on million-digit numbers for HOURS
+      // forestRoots calls (the `components` contraction, which d14's
+      // dupClusters reaches only above the driver limit) the driver ends
+      // up in Toom-Cook multiplications on million-digit numbers for HOURS
       // before any task runs (observed live at sf1). The firewall drops
       // originStats so each round plans from the default size, and AQE
       // re-plans shuffles from runtime sizes.
@@ -185,6 +196,184 @@ object GraphOps {
     require(selfRooted == start.getLong(2),
       "forestRoots did not converge: the parent pointers have a cycle")
     cur.select(col("id"), col("anc").as("root"))
+  }
+
+  /** edges: bigint (u, v). Connected components rooted at the
+    * component's minimum id: one (id, root) row per id in any edge, a
+    * self edge included; a null end is the row (null, null) and joins
+    * nothing. Up to `driverLimit` edges resolve in ONE driver
+    * pass — one job packs each partition's edges into two long arrays,
+    * caches them and sends them to the driver, where a union-find keeps
+    * the smaller id as the root. Larger edge sets take the min-label
+    * contraction over that cache, which nests [[forestRoots]] per round;
+    * either way the edge plan runs once. `maxRounds` bounds the
+    * contraction's rounds; `driverLimit` is the branch boundary here and
+    * in the nested forestRoots, `DriverResolveLimit` but in specs. */
+  private[graft] def components(edges: DataFrame, maxRounds: Int,
+      driverLimit: Int): DataFrame = {
+    val uv = edges.select("u", "v")
+    for (f <- uv.schema.fields) require(f.dataType == LongType,
+      s"components: ${f.name} must be bigint, got ${f.dataType.sql}")
+    // The cache keeps the edge plan (for dupClusters the pair
+    // generation, the costly part) from running again in the
+    // contraction's checkpoint. Edges already on the driver (a local
+    // relation) are packed there: packing them in a job would cost one.
+    val qe = uv.queryExecution
+    val blocks = qe.executedPlan match {
+      case l: LocalTableScanExec => Left(edgeBlock(l.executeCollect().iterator))
+      case _ => Right(qe.toRdd.mapPartitions(it => Iterator(edgeBlock(it)))
+        .persist(StorageLevel.MEMORY_AND_DISK))
+    }
+    val spark = uv.sparkSession
+    val local = try blocks.fold(
+        b => if (b.u.length <= driverLimit) Some(Seq(b)) else None,
+        collectUpTo(_, driverLimit)) match {
+      case Some(bs) => Left(bs)
+      case None => Right(checkpointFresh(blocks.fold(_ => uv, rdd =>
+        spark.createDataFrame(rdd.flatMap(_.rows), edgeSchema))))
+    } finally blocks.foreach(_.unpersist(blocking = false))
+    local.fold(componentsOnDriver(spark, _),
+      contractComponents(_, maxRounds, driverLimit))
+  }
+
+  /** One partition's edges as two id columns. A null end adds nothing to
+    * the components but the row (null, null), so it is kept as a self
+    * edge of the other end and a `sawNull` mark. */
+  private final case class EdgeBlock(u: Array[Long], v: Array[Long],
+      sawNull: Boolean) {
+    def rows: Iterator[Row] = u.indices.iterator.map(i => Row(u(i), v(i))) ++
+      (if (sawNull) Iterator(Row(null, null)) else Iterator.empty)
+  }
+
+  private val edgeSchema = StructType(Seq(
+    StructField("u", LongType), StructField("v", LongType)))
+
+  private def edgeBlock(rows: Iterator[InternalRow]): EdgeBlock = {
+    val (u, v) = (new ArrayBuilder.ofLong, new ArrayBuilder.ofLong)
+    var sawNull = false
+    for (r <- rows) {
+      val nu = r.isNullAt(0)
+      val nv = r.isNullAt(1)
+      sawNull ||= nu || nv
+      if (!(nu && nv)) {
+        u += r.getLong(if (nu) 1 else 0)
+        v += r.getLong(if (nv) 0 else 1)
+      }
+    }
+    EdgeBlock(u.result(), v.result(), sawNull)
+  }
+
+  /** The blocks of a persisted `rdd` when they hold at most `limit`
+    * edges, else None, from one job over every partition. A partition
+    * sends its block only when it holds at most its share of `limit`, so
+    * about `limit` edges at most reach the driver; when the total is
+    * under the limit but a partition held more than its share, a second
+    * job reads those partitions back from the cache. */
+  private def collectUpTo(rdd: RDD[EdgeBlock],
+      limit: Int): Option[Seq[EdgeBlock]] = {
+    val p = math.max(1, rdd.getNumPartitions)
+    val share = (limit.toLong + p) / p
+    val sc = rdd.sparkContext
+    val sent = sc.runJob(rdd, (it: Iterator[EdgeBlock]) => {
+      val b = it.next()
+      (b.u.length, if (b.u.length <= share) b else null)
+    })
+    if (sent.map(_._1.toLong).sum > limit) None
+    else {
+      val over = sent.indices.filter(sent(_)._2 == null)
+      val reread = if (over.isEmpty) Map.empty[Int, EdgeBlock]
+        else over.zip(sc.runJob(rdd, (it: Iterator[EdgeBlock]) => it.next(),
+          over)).toMap
+      Some(sent.indices.map(i => reread.getOrElse(i, sent(i)._2)))
+    }
+  }
+
+  /** Union-find over the collected edges with path halving; a union
+    * hangs the larger root under the smaller, so every root is its
+    * component's minimum id. The result is spread over the shuffle
+    * parallelism, as [[resolveOnDriver]]'s is. */
+  private def componentsOnDriver(spark: SparkSession,
+      blocks: Seq[EdgeBlock]): DataFrame = {
+    val index = new java.util.HashMap[Long, Integer](
+      math.max(16, blocks.map(_.u.length).sum * 2))
+    val ids = ArrayBuffer.empty[Long]
+    val parent = ArrayBuffer.empty[Int]
+    def node(id: Long): Int = {
+      val known = index.get(id)
+      if (known != null) known.intValue
+      else {
+        index.put(id, ids.length)
+        parent += ids.length
+        ids += id
+        ids.length - 1
+      }
+    }
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    for (b <- blocks; i <- b.u.indices) {
+      val (ra, rb) = (find(node(b.u(i))), find(node(b.v(i))))
+      if (ids(ra) < ids(rb)) parent(rb) = ra
+      else if (ids(rb) < ids(ra)) parent(ra) = rb
+    }
+    val out = Array.tabulate(ids.length)(i => Row(ids(i), ids(find(i)))) ++
+      (if (blocks.exists(_.sawNull)) Seq(Row(null, null)) else Nil)
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(ArraySeq.unsafeWrapArray(out),
+        spark.sessionState.conf.numShufflePartitions),
+      StructType(Seq(StructField("id", LongType), StructField("root", LongType))))
+  }
+
+  /** Iterative min-label contraction, for edge sets past the driver
+    * limit: each round relabels the edges, derives the min-neighbor
+    * parent forest (strictly decreasing, so acyclic) and FULLY compresses
+    * it with [[forestRoots]], so label chains collapse in one round
+    * instead of one hop per round. Only (label, label) pairs shuffle.
+    * `edges` is the checkpointed (u, v) frame; it is released at the
+    * end. */
+  private def contractComponents(edges: DataFrame, maxRounds: Int,
+      driverLimit: Int): DataFrame = {
+    // checkpointFresh (stats firewall) everywhere in this loop: labels
+    // round N feeds round N+1's joins, and a plain localCheckpoint
+    // forwards computed stats whose sizeInBytes compounds
+    // multiplicatively across rounds — see GraftFreshStats.
+    var labels = checkpointFresh(edges.select(col("u").as("id"))
+      .unionByName(edges.select(col("v").as("id")))
+      .distinct().withColumn("label", col("id")))
+    var round = 0
+    var converged = false
+    while (!converged && round < maxRounds) {
+      val lu = labels.select(col("id").as("u"), col("label").as("lu"))
+      val lv = labels.select(col("id").as("v"), col("label").as("lv"))
+      val e2 = checkpointFresh(edges.join(lu, "u").join(lv, "v")
+        .select(col("lu"), col("lv")).filter(col("lu") =!= col("lv")))
+      if (e2.isEmpty) converged = true
+      else {
+        val sym = e2.unionByName(
+          e2.select(col("lv").as("lu"), col("lu").as("lv")))
+        val parents = sym.groupBy("lu").agg(min("lv").as("m"))
+          .filter(col("m") < col("lu"))
+          .select(col("lu").as("id"), col("m").as("parent"))
+        val compressed = forestRoots(parents, 30, driverLimit)
+        val prev = labels
+        labels = checkpointFresh(labels
+          .join(compressed.select(col("id").as("label"), col("root")),
+            Seq("label"), "left")
+          .select(col("id"), coalesce(col("root"), col("label")).as("label")))
+        // the new labels table is materialized: release the superseded
+        // round's labels and this round's relabeled-edge / fixpoint
+        // checkpoints instead of pinning them for the session
+        unpersistCheckpoints(prev)
+        unpersistCheckpoints(compressed)
+      }
+      unpersistCheckpoints(e2)
+      round += 1
+    }
+    require(converged, s"components did not converge in $maxRounds rounds")
+    unpersistCheckpoints(edges)
+    labels.select(col("id"), col("label").as("root"))
   }
 
   /** G1-analog query on the events table: each user's events form a chain

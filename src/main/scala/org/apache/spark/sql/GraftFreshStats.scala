@@ -12,11 +12,12 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `SizeInBytesOnlyStatsPlanVisitor.visitJoin` MULTIPLIES child sizes,
   * so the carried `sizeInBytes` compounds round over round — a k-hop
   * self-join round raises the bit-width ×(k+1), and with nested loops
-  * (dupClusters calling forestRoots per round) the estimate reaches
-  * millions of digits within ~10 rounds. Planning then pins the driver
-  * in `BigInteger.multiplyToomCook3` for HOURS before a single task
-  * launches (observed live: d14 at sf1, main thread 15+ CPU-minutes
-  * into one stats visit). Eager checkpointing does NOT help — the stats
+  * (the `GraphOps.components` contraction calling forestRoots per
+  * round, which dupClusters reaches only above the driver limit) the
+  * estimate reaches millions of digits within ~10 rounds. Planning then
+  * pins the driver in `BigInteger.multiplyToomCook3` for HOURS before a
+  * single task launches (observed live: d14 at sf1, main thread 15+
+  * CPU-minutes into one stats visit). Eager checkpointing does NOT help — the stats
   * still ride along.
   *
   * `checkpointFresh` materializes like `localCheckpoint` and then

@@ -138,36 +138,77 @@ class DedupSpec extends SparkSpec {
     assert(indexed == brute)
   }
 
+  // components: {1..6} via a zig-zag chain, {10,11,12} via a star with a
+  // NON-min hub (11), {20,21} pair, a decreasing path {30..34}, a self
+  // pair {40} and a pair with a null side {50}
+  private lazy val ufPairs = {
+    import spark.implicits._
+    Seq[(Long, Option[Long])](
+      (2L, Some(1L)), (2L, Some(3L)), (4L, Some(3L)), (4L, Some(5L)),
+      (6L, Some(5L)),
+      (11L, Some(10L)), (11L, Some(12L)),
+      (20L, Some(21L)),
+      (34L, Some(33L)), (33L, Some(32L)), (32L, Some(31L)), (31L, Some(30L)),
+      (40L, Some(40L)),
+      (50L, None))
+      .toDF("doc_a", "doc_b")
+  }
+
   test("dupClusters equals union-find on adversarial pair graphs " +
       "(chains, stars, merged components, increasing/decreasing paths)") {
-    import spark.implicits._
-    // components: {1..6} via a zig-zag chain, {10,11,12} via a star with
-    // a NON-min hub (11), {20,21} pair, and a decreasing path {30..34}
-    val pairs = Seq(
-      (2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (6L, 5L),
-      (11L, 10L), (11L, 12L),
-      (20L, 21L),
-      (34L, 33L), (33L, 32L), (32L, 31L), (31L, 30L))
-      .toDF("doc_a", "doc_b")
-    val got = Dedup.dupClusters(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // local union-find ground truth
+    // local union-find ground truth; a null side is the row (null, null)
+    val rows = ufPairs.collect()
     val parent = scala.collection.mutable.Map[Long, Long]()
     def find(x: Long): Long = {
       val p = parent.getOrElse(x, x)
       if (p == x) x else { val r = find(p); parent(x) = r; r }
     }
-    pairs.collect().foreach { r =>
+    rows.filter(r => !r.isNullAt(1)).foreach { r =>
       val (a, b) = (find(r.getLong(0)), find(r.getLong(1)))
       if (a != b) parent(math.max(a, b)) = math.min(a, b)
     }
-    val nodes = pairs.collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
+    val nodes = rows.flatMap(r => Seq(r.getLong(0)) ++
+      Option(r.get(1)).map(_.asInstanceOf[Long])).toSet
     // canonical = component min: normalize union-find roots to minima
-    val byRoot = nodes.groupBy(find)
-    val expected = byRoot.flatMap { case (_, members) =>
-      val m = members.min; members.map(_ -> m)
+    val expected = nodes.groupBy(find).flatMap { case (_, members) =>
+      val m = members.min; members.map(x => (x: Any) -> (m: Any))
+    }.toMap + ((null, null))
+    // both branches: dupClusters takes the driver union-find, and
+    // components at limit 0 the min-label contraction; the fixture adds a
+    // self pair and a null side. Hash-partitioned on u > 30 over 4
+    // partitions with a limit of 20 (a share of 6 per partition), the 14
+    // edges leave some partition over its share, which the driver branch
+    // reads back in a second job.
+    val uv = ufPairs.select(col("doc_a").as("u"), col("doc_b").as("v"))
+    val skewed = uv.repartition(4, col("u") > 30)
+    for ((branch, result) <- Seq(
+        "driver" -> Dedup.dupClusters(ufPairs),
+        "driver, a partition over its share" ->
+          graft.plans.GraphOps.components(skewed, 15, 20),
+        "contraction" -> graft.plans.GraphOps.components(uv, 15, 0),
+        "contraction, partitioned" ->
+          graft.plans.GraphOps.components(skewed, 15, 0))) {
+      val got = result.collect().map(r => (r.get(0), r.get(1))).toSeq
+      assert(got.size == got.toMap.size, s"$branch: an id repeats")
+      assert(got.toMap == expected,
+        s"$branch: got ${got.toMap} expected $expected")
     }
-    assert(got == expected, s"got $got expected $expected")
+  }
+
+  test("dupClusters' driver branch runs no job beyond collecting the " +
+      "pairs, and rejects non-bigint ids when the plan is built") {
+    import org.apache.spark.GroupJobCount
+    import spark.implicits._
+    val sc = spark.sparkContext
+    for (pairs <- Seq(ufPairs, ufPairs.repartition(4))) {
+      val (_, collectJobs) = GroupJobCount(sc)(pairs.collect())
+      val (_, jobs) = GroupJobCount(sc)(Dedup.dupClusters(pairs))
+      assert(jobs <= collectJobs,
+        s"dupClusters ran $jobs jobs, collecting its pairs $collectJobs")
+    }
+    intercept[IllegalArgumentException] {
+      Dedup.dupClusters(Seq((1, 2)).toDF("doc_a", "doc_b"))
+    }
   }
 
   test("permuted-table simhash: deterministic, exact precision, recall " +

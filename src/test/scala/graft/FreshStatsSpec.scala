@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * forwards the checkpointed plan's COMPUTED statistics, so loop-carried
   * checkpoints compound sizeInBytes multiplicatively round over round —
   * at sf1 the d14 driver sat in million-digit BigInteger multiplication
-  * for 20+ minutes of pure planning. These tests assert the mechanism
+  * for 20+ minutes of pure planning, back when dupClusters always ran
+  * the contraction (it now nests forestRoots per round only above
+  * `GraphOps.DriverResolveLimit` pairs). These tests assert the mechanism
   * itself (stats growth with plain checkpoints, constant-size stats
   * through checkpointFresh) so a refactor that silently drops the
   * firewall shows up as a red spec, not a stuck cluster.

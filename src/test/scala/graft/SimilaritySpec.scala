@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -147,6 +148,125 @@ class SimilaritySpec extends SparkSpec {
     val b2 = Similarity.kmeansTrain(emb, 2, 2, sampleN = 32,
       hashSample = true).collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
     assert(b1.toSeq == b2.toSeq, "hash sampling must be deterministic")
+  }
+
+  /** The distributed Lloyd loop kmeansTrain ran before it trained on the
+    * driver, kept whole (sampler, init, rounds) as the reference
+    * the trained book must equal bit for bit. */
+  private def sparkLoopBook(corpus: DataFrame, k: Int, iters: Int,
+      sampleN: Int = 4096, hashSample: Boolean = true): DataFrame = {
+    import org.apache.spark.sql.GraftFreshStats.{checkpointFresh, unpersistCheckpoints}
+    import org.apache.spark.sql.types._
+    val bound = math.max(sampleN, 8 * k)
+    val base = corpus.select(col("vec_id"),
+      transform(col("embedding"), x => x.cast("double")).as("cv"))
+    val sampled =
+      if (!hashSample) base.filter(col("vec_id") < bound)
+      else {
+        val n = corpus.count()
+        if (n <= bound) base
+        else base.filter(
+          pmod(xxhash64(col("vec_id")), lit(1000000L)) <
+            bound * 1000000L / n)
+      }
+    val c = checkpointFresh(sampled)
+    val init = c.orderBy("vec_id").limit(k)
+      .select(col("vec_id"), col("cv")).collect()
+      .zipWithIndex.map { case (r, i) => (i, r.getSeq[Double](1)) }
+    require(init.length == k)
+    var cents = spark.createDataFrame(
+      spark.sparkContext.parallelize(init.toSeq, 1)
+        .map { case (i, v) => org.apache.spark.sql.Row(i, v) },
+      StructType(Seq(StructField("cluster", IntegerType),
+        StructField("centroid", ArrayType(DoubleType)))))
+    for (_ <- 0 until iters - 1) {
+      val prevCents = cents
+      val assign = checkpointFresh(c.crossJoin(broadcast(prevCents))
+        .withColumn("score", Similarity.cosine(col("cv"), col("centroid")))
+        .groupBy("vec_id")
+        .agg(min(struct(negate(col("score")).as("ns"),
+          col("cluster").as("cluster"), col("cv").as("cv"))).as("best"))
+        .select(col("best.cluster").as("cluster"), col("best.cv").as("cv")))
+      unpersistCheckpoints(prevCents)
+      cents = checkpointFresh(assign
+        .select(col("cluster"), posexplode(col("cv")).as(Seq("i", "x")))
+        .groupBy("cluster", "i")
+        .agg(sum(col("x").cast("decimal(28,10)")).cast("double").as("x"))
+        .groupBy("cluster")
+        .agg(array_sort(collect_list(struct(col("i"), col("x")))).as("ps"))
+        .select(col("cluster"),
+          transform(col("ps"), p => p("x")).as("centroid")))
+      unpersistCheckpoints(assign)
+    }
+    unpersistCheckpoints(c)
+    cents
+  }
+
+  /** A book as cluster -> the raw bits of each centroid dimension. */
+  private def bookBits(book: DataFrame): Map[Int, Seq[Long]] =
+    book.collect().map(r => r.getInt(0) ->
+      r.getSeq[Double](1).map(java.lang.Double.doubleToRawLongBits)).toMap
+
+  test("kmeansTrain's book equals the distributed Lloyd loop's bit for " +
+      "bit: gate corpus, sampleN = 32, 8k > sampleN, an empty cluster, " +
+      "a score tie") {
+    import spark.implicits._
+    def same(corpus: DataFrame, k: Int, iters: Int, sampleN: Int,
+        hash: Boolean): Map[Int, Seq[Long]] = {
+      val got = bookBits(
+        Similarity.kmeansTrain(corpus, k, iters, sampleN, hash))
+      assert(got == bookBits(sparkLoopBook(corpus, k, iters, sampleN, hash)),
+        s"k=$k iters=$iters sampleN=$sampleN hash=$hash")
+      got
+    }
+    for (hash <- Seq(true, false)) {
+      // the gate corpus at the registered config
+      same(emb, 8, 3, 4096, hash)
+      // a binding bound (n > 32): the hash sampler drops rows
+      same(emb, 2, 3, 32, hash)
+      // 8k > sampleN: the bound is 8k
+      same(emb, 8, 3, 32, hash)
+    }
+    // ids 0 and 1 share a direction, so every vector scores the same
+    // against clusters 0 and 1: the tie goes to cluster 0, cluster 1
+    // wins no vector and leaves the book
+    val tied = Seq(
+      (0L, Array(1f, 0f)), (1L, Array(2f, 0f)), (2L, Array(0f, 1f)),
+      (3L, Array(0.9f, 0.1f)), (4L, Array(0.2f, 0.8f)))
+      .toDF("vec_id", "embedding")
+    for (hash <- Seq(true, false))
+      assert(same(tied, 3, 3, 4096, hash).keySet == Set(0, 2),
+        "the cluster that wins no vector must leave the book")
+    // a null embedding adds to no centroid; as an init row its null
+    // centroid scores null, which the loop's min orders first
+    val withNull = tied.unionByName(
+      Seq((5L, null: Array[Float])).toDF("vec_id", "embedding"))
+    same(withNull, 3, 3, 4096, hash = true)
+    same(withNull.withColumn("vec_id", (col("vec_id") + 1) % 6), 3, 3,
+      4096, hash = true)
+  }
+
+  test("kmeansTrain rejects a repeated vec_id at every k") {
+    import spark.implicits._
+    val repeated = Seq(
+      (0L, Array(1f, 0f)), (1L, Array(0f, 1f)), (1L, Array(0.5f, 0.5f)),
+      (2L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding")
+    // k = 2 keeps the bound at sampleN; k = 2 with sampleN = 8 makes the
+    // bound 8k = 16 instead
+    for ((k, sampleN) <- Seq((2, 4096), (2, 8)); hash <- Seq(true, false)) {
+      val e = intercept[IllegalArgumentException] {
+        Similarity.kmeansTrain(repeated, k, 3, sampleN, hash)
+      }
+      assert(e.getMessage.contains("vec_id 1 repeats"), e.getMessage)
+    }
+  }
+
+  test("hash-sampled kmeansTrain runs at most 3 jobs: the corpus count " +
+      "and one sample collect") {
+    val (_, jobs) = org.apache.spark.GroupJobCount(spark.sparkContext) {
+      Similarity.kmeansTrain(emb, 8, 3)
+    }
+    assert(jobs <= 3, s"kmeansTrain ran $jobs jobs: per-round jobs are back")
   }
 
   test("distributed-Gramian rotation equals a driver-collected replica " +
