@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** 1-minute loadavg — sampled before the session exists, the reading
     * reflects co-tenant load only. */
@@ -45,17 +44,6 @@ object Bench {
         s"${maxWaitSec}s: ${busy.mkString(", ")}")
   }
 
-  /** A fresh session; with `silverDir`, silvers are written under it and
-    * reused across sessions (the restart-per-family variant). */
-  private def newSession(cpus: Int, silverDir: Option[String]): SparkSession = {
-    val spark = GraftSession.local(cpus)
-    silverDir.foreach { d =>
-      spark.conf.set("graft.silver.dir", d)
-      spark.conf.set("graft.silver.reuse", "true")
-    }
-    spark
-  }
-
   // 4-decimal seconds: sub-0.1 ms resolution is noise, and the shorter
   // line keeps the full JSON inside tail-bounded log captures.
   private def r4(v: Double): String = "%.4f".formatLocal(java.util.Locale.ROOT, v)
@@ -74,13 +62,13 @@ object Bench {
     * crash can never read as a plausible (or near-zero) time. */
   private[graft] def records(ingestParts: Seq[(String, Option[Double])],
       results: Seq[(String, Option[Double])], sfDir: String, cpus: Int,
-      restartPerFamily: Boolean, gated: Seq[String], loadStart: Double,
-      loadMax: Double, loadEnd: Double, artifact: String): (String, String) = {
+      loadStart: Double, loadMax: Double, loadEnd: Double,
+      artifact: String): (String, String) = {
     val ingest = ingestParts.flatMap(_._2).sum
     val total = ingest + results.flatMap(_._2).sum
     val failedJson = jsonList(
       (ingestParts ++ results).collect { case (k, None) => k }.sorted)
-    val json = s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":${jsonMap(("ingest_silver" -> Some(ingest)) +: results)},"sf":"$sfDir","load_start":$loadStart,"load_max":$loadMax,"load_end":$loadEnd,"cpus":$cpus,"restart_per_family":$restartPerFamily,"gated":${jsonList(gated.sorted)},"failed":$failedJson,"ingest_detail":${jsonMap(ingestParts)}}"""
+    val json = s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":${jsonMap(("ingest_silver" -> Some(ingest)) +: results)},"sf":"$sfDir","load_start":$loadStart,"load_max":$loadMax,"load_end":$loadEnd,"cpus":$cpus,"failed":$failedJson,"ingest_detail":${jsonMap(ingestParts)}}"""
     // Driver-visible per-query timings (r16 verdict item 2): the stdout
     // line carries a `queries` map SIZE-BUDGETED so the whole line stays
     // inside the driver's tail capture — entries enter failed first, then
@@ -91,7 +79,7 @@ object Bench {
     val byTime = ("ingest_silver" -> Some(ingest)) +:
       results.sortBy(_._2.fold(Double.NegativeInfinity)(-_))
     def lineWith(entries: Seq[(String, Option[Double])], elided: Int): String =
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"load_start":$loadStart,"load_max":$loadMax,"load_end":$loadEnd,"restart_per_family":$restartPerFamily,"failed":$failedJson,"queries_elided":$elided,"queries":${jsonMap(entries)},"artifact":"$artifact"}"""
+      s"""{"metric":"total","value":${r4(total)},"unit":"sec","sf":"$sfDir","cpus":$cpus,"n_queries":${results.size},"load_start":$loadStart,"load_max":$loadMax,"load_end":$loadEnd,"failed":$failedJson,"queries_elided":$elided,"queries":${jsonMap(entries)},"artifact":"$artifact"}"""
     var keep = byTime.length
     while (keep > 0 &&
         lineWith(byTime.take(keep), byTime.length - keep).length > 1900)
@@ -99,23 +87,17 @@ object Bench {
     (json, lineWith(byTime.take(keep), byTime.length - keep))
   }
 
+  /** Times the ingest parts and then every registered query, or only the
+    * comma-separated names in the first argument (the form Verify takes):
+    * `runMain graft.Bench [names]`. An unknown name fails before any
+    * work. */
   def main(args: Array[String]): Unit = {
+    val queries = SparkEntry.select(args.headOption)
     awaitQuiet()
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.defaultCpus
-    // per-family session restart (SCALING.md "JVM residue"): each query
-    // family runs in a fresh SparkSession+SparkContext against a shared
-    // reuse-enabled silver dir, splitting real plan cost from in-session
-    // JVM aging. Default off — the standard recording is one session.
-    val restartPerFamily =
-      sys.env.get("SPARK_GRAFT_RESTART_PER_FAMILY").contains("1")
-    val silverDir =
-      if (restartPerFamily)
-        Some(java.nio.file.Files.createTempDirectory("graft-bench-silver-")
-          .toString)
-      else None
-    var spark = newSession(cpus, silverDir)
+    val spark = GraftSession.local(cpus)
     // warm up the session (codegen, parquet footers) outside any timing
     SparkEntry.entry(spark).count()
     // shared silvers, each timed as an ingest part: the chain sim/classify
@@ -162,28 +144,7 @@ object Bench {
     // above ~1 means the box was already busy); load_max during the run
     // includes our own executors, so compare it against `cpus`, not 0.
     var loadMax = loadStart
-    var family = ""
-    // Heaviest sketch/cluster queries are GATED by default: their outputs
-    // are correctness-pinned every round (oracle/spec), so re-timing them
-    // per round buys nothing while dominating the driver budget. Set
-    // SPARK_GRAFT_BENCH_FULL=1 for the full recording (SCALING.md runs).
-    val benchFull = sys.env.get("SPARK_GRAFT_BENCH_FULL").contains("1")
-    val gated: Set[String] =
-      if (benchFull) Set.empty
-      else Set("d26_simhash_permuted", "d35_quality_keeper",
-        "m09_multimodal_clusters")
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(q => gated(q._1)).map { case (name, fn) =>
-      if (restartPerFamily && name.take(1) != family) {
-        family = name.take(1)
-        spark.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-        spark = newSession(cpus, silverDir)
-        // re-warm the fresh JVM-session outside any timing
-        try { SparkEntry.entry(spark).count(); () }
-        catch { case _: Throwable => () }
-      }
+    val results = queries.map { case (name, fn) =>
       loadMax = math.max(loadMax, loadavg())
       timed("query", name) { fn(spark, sfDir).count(); () }
     }
@@ -197,7 +158,7 @@ object Bench {
     val artifact =
       sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LAST.json")
     val (json, line) = records(ingestParts, results, sfDir, cpus,
-      restartPerFamily, gated.toSeq, loadStart, loadMax, loadEnd, artifact)
+      loadStart, loadMax, loadEnd, artifact)
     java.nio.file.Files.writeString(java.nio.file.Paths.get(artifact), json)
     spark.stop()
     println(line)

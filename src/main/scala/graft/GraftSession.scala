@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession every main and spec runs on, so the run
-  * checked for correctness (Verify, the specs) and the runs that are
-  * timed (Bench, BenchOne, DupBench) share one configuration.
+  * checked for correctness (Verify, the specs) and the run that is
+  * timed (Bench) share one configuration.
   * The only input is the core count.
   */
 object GraftSession {

@@ -46,8 +46,8 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = t(s, d, "embeddings")
 }
 
-/** One engine query: the Spark program plus (when SQL-expressible) the
-  * equivalent ANSI SQL the driver runs in DuckDB over the same parquet.
+/** One engine query: the Spark program plus the equivalent ANSI SQL the
+  * driver runs in DuckDB over the same parquet.
   * Column names and row order must match between the two (the driver
   * sorts columns by name then hashes values), so every query ends in a
   * fully deterministic ORDER BY with unique tie-breakers.
@@ -55,13 +55,10 @@ object Tables {
 final case class Q(
     name: String,
     fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    doc: String = "")
+    oracle: String)
 
 object Q {
   def apply(name: String, oracle: String)(
       fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, Some(oracle))
-  def noOracle(name: String)(fn: (SparkSession, String) => DataFrame): Q =
-    Q(name, fn, None)
+    Q(name, fn, oracle)
 }

@@ -6,8 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, rest @ _*) = args
     // optional third arg: comma-separated query subset for local iteration
-    val only: Option[Set[String]] =
-      rest.headOption.map(_.split(",").map(_.trim).toSet)
+    val queries = SparkEntry.select(rest.headOption)
     val spark = GraftSession.local()
     new java.io.File(outDir).mkdirs()
     // A throwing query must be LOUD: round-9 shipped a query whose
@@ -15,9 +14,7 @@ object Verify {
     // correctness entry at all. Keep going (so one bad query doesn't
     // hide the rest of the dump) but exit non-zero at the end.
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    queries.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

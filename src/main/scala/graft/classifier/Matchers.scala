@@ -51,11 +51,6 @@ object Matching {
     }
   }
 
-  /** Matches any block of a given btype (post-rewrite matching —
-    * BlockTypeMatcher). */
-  def blockType(t: String): Pattern = (b: Block) =>
-    if (b.btype == t) Some(Seq(b)) else None
-
   /** Generic predicate matcher. */
   def generic(pred: Block => Boolean): Pattern = (b: Block) =>
     if (pred(b)) Some(Seq(b)) else None
@@ -103,26 +98,6 @@ object Matching {
       }
     }
     Some(PatternMatch(consumed.toSeq, captures))
-  }
-
-  /** Match a sequence of child patterns against a block's children:
-    * every non-optional pattern must match a distinct child (in order of
-    * the children). Returns consumed blocks. */
-  def matchChildren(b: Block, patterns: Seq[Pattern]): Option[Seq[Block]] = {
-    var remaining = b.children
-    val consumed = scala.collection.mutable.ArrayBuffer[Block]()
-    for (p <- patterns) {
-      remaining.iterator.map(c => (c, p(c))).collectFirst {
-        case (c, Some(got)) => (c, got)
-      } match {
-        case Some((c, got)) =>
-          consumed ++= got
-          remaining = remaining.filterNot(_ eq c)
-        case None =>
-          if (!childOptional(p)) return None
-      }
-    }
-    Some(consumed.toSeq)
   }
 
   /** A rewriting matcher: when `build` returns a typed block for some node

@@ -74,14 +74,6 @@ object Interfaces {
     Boc.dictKeys(s.loadRef(), keyLen).map(_.toLong)
   }
 
-  /** Column form of the extractor (null on malformed/non-standard code —
-    * detection then falls back to the code-hash table only). */
-  val methodIdsFromCodeUdf: org.apache.spark.sql.expressions.UserDefinedFunction =
-    udf { (code: String) =>
-      try { if (code == null) null else methodIdsFromCode(code) }
-      catch { case scala.util.control.NonFatal(_) => null }
-    }
-
   /** Detect by exact code hash, else by method-id subset. */
   def detect(codeHashTable: Map[String, String])(
       codeHash: String, methodIds: Seq[Long]): Option[String] = {

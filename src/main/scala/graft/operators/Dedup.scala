@@ -609,20 +609,6 @@ object Dedup {
     stars.unionByName(nearRows).unionByName(classRows)
   }
 
-  /** Exact all-pairs shingle Jaccard (quadratic — test oracle only). */
-  def bruteForcePairs(docs: DataFrame, minJaccard: Double): DataFrame = {
-    val sets = docs.withColumn("sh", shingles(col("text")))
-      .select(col("doc_id"), col("sh"))
-    val a = sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
-    val b = sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
-    a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
-          size(array_union(col("sh_a"), col("sh_b"))))
-      .filter(col("jaccard") >= minJaccard)
-      .select("doc_a", "doc_b", "jaccard")
-  }
-
   /** DuckDB mirror of [[jaccardNearDupReportFrom]] at t10/10: the same
     * shingle-set classes (key = chr(30)-joined sorted set — the md5 is
     * an engine-side shuffle-width choice, the PARTITION it induces is

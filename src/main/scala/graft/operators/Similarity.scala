@@ -432,19 +432,16 @@ object Similarity {
     * index). Iterations are a driver LOOP (k-means is inherently
     * round-synchronous), each materialized so lineage stays flat. */
   def kmeansAssign(corpus: DataFrame, k: Int, iters: Int): DataFrame =
-    // the registered paths (e07/e08/e09/t05 and their sf0.1
-    // re-derivations) now train through the HASH sampler — the library
-    // default users get (r15 verdict item 3). The committed sf0.01
-    // oracle VALUES are sampler-agnostic (n=500 ≤ bound: both samplers
-    // see the whole corpus — SimilaritySpec pins the coincidence); the
-    // sf0.1 replicas (tools/derive_kmeans.py, patch_oracle_scale.py)
-    // mirror the xxhash64 threshold bit-exactly, so the path the oracle
-    // proves IS the production path at every recorded scale.
+    // the committed sf0.01 oracle VALUES see the whole corpus (n=500 ≤
+    // bound); the sf0.1 replicas (tools/derive_kmeans.py,
+    // patch_oracle_scale.py) mirror the xxhash64 sample threshold
+    // bit-exactly, so the path the oracle proves IS the production path
+    // at every recorded scale.
     kmeansAssignWith(corpus, kmeansTrain(corpus, k, iters))
 
   /** SAMPLE-TRAINED coarse-quantizer book (r12 verdict item 5): Lloyd
-    * iterates over a bounded deterministic sample — the first
-    * min(n, max(sampleN, 8k)) vectors by vec_id — instead of the full
+    * iterates over a bounded deterministic sample — about
+    * min(n, max(sampleN, 8k)) vectors — instead of the full
     * corpus, the documented web-scale mitigation now built: training
     * cost is O(sample·k·iters) regardless of corpus size, and the full
     * corpus is touched exactly ONCE by the final assignment pass
@@ -453,21 +450,12 @@ object Similarity {
     * every oracle that embeds it (e07/e08/e09/t05) — is unchanged from
     * the full-corpus trainer; SimilaritySpec pins that equivalence.
     *
-    * Two deterministic samplers, `hashSample` selecting between them:
-    *  - hash (DEFAULT — the production path, r14 verdict item 8):
-    *    accept rows by xxhash64(vec_id) threshold sized to the corpus —
-    *    content- and order-independent, ~bound rows in expectation at
-    *    any id distribution (skewed, gappy, sparse), at the cost of one
-    *    corpus count. When the corpus fits the bound, both samplers see
-    *    the same rows and train the SAME book (SimilaritySpec pins it),
-    *    which is why the gate snapshots are sampler-agnostic.
-    *  - prefix (hashSample = false): vec_id < bound — a pure
-    *    pushed-down filter, no pre-count. Kept as the cheap option for
-    *    dense 0-based id spaces; since r16 the registered queries train
-    *    through the hash default too ([[kmeansAssign]]), with the
-    *    replicas (tools/derive_kmeans.py, patch_oracle_scale.py)
-    *    mirroring the xxhash64 threshold bit-exactly (the Spark
-    *    XxHash64 long path is a public, fixed algorithm).
+    * The sampler accepts rows by an xxhash64(vec_id) threshold sized to
+    * the corpus: content- and order-independent, ~bound rows in
+    * expectation at any id distribution (skewed, gappy, sparse), at the
+    * cost of one corpus count. The replicas (tools/derive_kmeans.py,
+    * patch_oracle_scale.py) mirror the threshold bit-exactly (the Spark
+    * XxHash64 long path is a public, fixed algorithm).
     *
     * Returns the (cluster, centroid) book after iters-1 updates — the
     * book the final assignment pass scores against, identical to what
@@ -484,18 +472,14 @@ object Similarity {
     * so the rounding is Spark's. A cluster that wins no vector leaves
     * the book. vec_id must be unique in the sample; a repeat fails. */
   def kmeansTrain(corpus: DataFrame, k: Int, iters: Int,
-      sampleN: Int = 4096, hashSample: Boolean = true): DataFrame = {
+      sampleN: Int = 4096): DataFrame = {
     val bound = math.max(sampleN, 8 * k)
     val base = corpus.select(col("vec_id"), asDouble(col("embedding")).as("cv"))
+    val n = corpus.count()
     val sampled =
-      if (!hashSample) base.filter(col("vec_id") < bound)
-      else {
-        val n = corpus.count()
-        if (n <= bound) base
-        else base.filter(
-          pmod(xxhash64(col("vec_id")), lit(1000000L)) <
-            bound * 1000000L / n)
-      }
+      if (n <= bound) base
+      else base.filter(
+        pmod(xxhash64(col("vec_id")), lit(1000000L)) < bound * 1000000L / n)
     val idOrd = PhysicalDataType.ordering(sampled.schema("vec_id").dataType)
     val byId = Ordering.by((r: Row) =>
       Option(CatalystTypeConverters.convertToCatalyst(r.get(0))))(

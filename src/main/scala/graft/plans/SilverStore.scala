@@ -45,22 +45,12 @@ object SilverStore {
     s.replaceAll("[^A-Za-z0-9._-]", "_")
 
   /** The silver table `name` derived from source `srcDir`: built and
-    * written exactly once per session, re-read thereafter. With
-    * `graft.silver.reuse=true` (and a configured `graft.silver.dir`), a
-    * table already on disk is read instead of rebuilt — the cross-
-    * session cluster semantic (silver written once at ingest, served to
-    * every later session), used by the per-family session-restart bench
-    * variant so a restart re-reads rather than re-ingests. */
+    * written exactly once per session, re-read thereafter. */
   def table(spark: SparkSession, srcDir: String, name: String)(
       build: => DataFrame): DataFrame =
     tables.getOrElseUpdate((spark, s"${sanitize(srcDir)}/$name"), {
       val path = s"${base(spark)}/${sanitize(srcDir)}/$name"
-      val reuse = spark.conf.getOption("graft.silver.reuse").contains("true")
-      val hPath = new org.apache.hadoop.fs.Path(path)
-      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!(reuse && fs.exists(new org.apache.hadoop.fs.Path(
-          path + "/_SUCCESS"))))
-        build.write.mode("overwrite").parquet(path)
+      build.write.mode("overwrite").parquet(path)
       spark.read.parquet(path)
     })
 }

@@ -33,15 +33,6 @@ case class CurationVerdict(doc_id: Long, n_tokens: Int,
   */
 object StreamCuration {
 
-  /** Mirror of Curation.scrub's column program as per-row Scala: same
-    * tokenizer (trim + `\s+` split), same marker, same single-space
-    * rebuild — string-identical, so the md5 dedup keys agree with the
-    * batch/oracle side. */
-  private[graft] def scrubText(text: String, terms: Set[String]): String =
-    text.trim.split("\\s+")
-      .map(t => if (terms(t)) "[REDACTED]" else t)
-      .mkString(" ")
-
   def verdicts(docs: Dataset[DocRow], blocklist: Seq[String],
       minTokens: Int): Dataset[CurationVerdict] = {
     import docs.sparkSession.implicits._

@@ -10,9 +10,8 @@ class BenchRecordSpec extends AnyFunSuite {
     val (full, line) = Bench.records(
       ingestParts = Seq("chain" -> Some(2.0), "phash" -> None),
       results = Seq("a01_good" -> Some(1.5), "b02_bad" -> None),
-      sfDir = "sf", cpus = 4, restartPerFamily = false,
-      gated = Seq("m09"), loadStart = 0.5, loadMax = 1.0, loadEnd = 0.75,
-      artifact = "BENCH_LAST.json")
+      sfDir = "sf", cpus = 4, loadStart = 0.5, loadMax = 1.0,
+      loadEnd = 0.75, artifact = "BENCH_LAST.json")
     for (json <- Seq(full, line)) {
       val r = mapper.readTree(json)
       assert(r.get("value").asDouble == 3.5, json)
@@ -31,7 +30,7 @@ class BenchRecordSpec extends AnyFunSuite {
   test("the stdout line keeps its size budget by eliding the fastest entries") {
     val results = (1 to 200).map(i => f"q$i%03d_query_with_a_long_name" -> Some(i.toDouble))
     val (full, line) = Bench.records(Seq("chain" -> Some(1.0)), results,
-      "sf", 4, false, Nil, 0.0, 0.0, 0.0, "BENCH_LAST.json")
+      "sf", 4, 0.0, 0.0, 0.0, "BENCH_LAST.json")
     assert(line.length <= 1900)
     val r = mapper.readTree(line)
     val kept = r.get("queries").fieldNames()

@@ -1,14 +1,30 @@
 package graft
 
 import graft.operators.Dedup
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
 
   private lazy val docs = Tables.documents(spark, sf)
 
+  /** Exact all-pairs shingle Jaccard (quadratic): the truth the
+    * pair operators are checked against. */
+  private def bruteForcePairs(docs: DataFrame, minJaccard: Double): DataFrame = {
+    val sets = docs.withColumn("sh", Dedup.shingles(col("text")))
+      .select(col("doc_id"), col("sh"))
+    val a = sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a"))
+    val b = sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"))
+    a.crossJoin(b).filter(col("doc_a") < col("doc_b"))
+      .withColumn("jaccard",
+        size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
+          size(array_union(col("sh_a"), col("sh_b"))))
+      .filter(col("jaccard") >= minJaccard)
+      .select("doc_a", "doc_b", "jaccard")
+  }
+
   test("minhash LSH finds planted near-dups with high recall, verified precision") {
-    val truth = Dedup.bruteForcePairs(docs, 0.7)
+    val truth = bruteForcePairs(docs, 0.7)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val found = Dedup.minhashPairs(docs, 0.7)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -26,7 +42,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash near-dup pairs include the highest-jaccard planted dups") {
-    val strong = Dedup.bruteForcePairs(docs, 0.9)
+    val strong = bruteForcePairs(docs, 0.9)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val sim = Dedup.simhashPairs(docs, 10)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -132,7 +148,7 @@ class DedupSpec extends SparkSpec {
       docs.withColumn("sh", Dedup.shingles(col("text"))).select("doc_id", "sh"),
       0.3).select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = Dedup.bruteForcePairs(docs, 0.3)
+    val brute = bruteForcePairs(docs, 0.3)
       .select("doc_a", "doc_b")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(indexed == brute)
@@ -437,7 +453,7 @@ class DedupSpec extends SparkSpec {
     // quadratic path the contraction replaces), clustered by the same
     // CC machinery
     val full = Dedup.dupClusters(
-      Dedup.bruteForcePairs(docs, 0.3).select("doc_a", "doc_b"))
+      bruteForcePairs(docs, 0.3).select("doc_a", "doc_b"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val contracted = graft.operators.Dedup.d43.fn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -28,8 +28,14 @@ class RegistryGateSpec extends SparkSpec {
     assert(failures.isEmpty, s"\n${failures.mkString("\n")}")
   }
 
-  test("every oracle SQL key has a registered query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracleSql without queries entry: $orphans")
+  test("a query name registered twice fails the registry") {
+    val fn: (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame = (s, _) => s.emptyDataFrame
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.byName(Seq(Q("a01", "SELECT 1")(fn),
+        Q("b02", "SELECT 2")(fn), Q("a01", "SELECT 3")(fn)))
+    }
+    assert(e.getMessage.contains("a01") && !e.getMessage.contains("b02"),
+      e.getMessage)
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Similarity
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -90,63 +90,47 @@ class SimilaritySpec extends SparkSpec {
 
   test("sample-trained quantizer: the book ignores vectors beyond the " +
       "deterministic sample bound; the assignment pass still covers them") {
-    import spark.implicits._
-    // rows ABOVE the vec_id sample bound (max(4096, 8k)) must not move
-    // the trained book — training is sample-bounded by contract, which
-    // is exactly why the gate-corpus oracle snapshots (n=500, sample ==
-    // corpus) survive the web-scale trainer unchanged
-    val extra = (0 until 30).map { i =>
-      (100000L + i,
-        Array.tabulate(64)(j => (((i * 37 + j * 11) % 97) / 97.0f) - 0.5f),
-        i % 4)
-    }.toDF("vec_id", "embedding", "label")
-    val big = emb.select("vec_id", "embedding", "label")
-      .unionByName(extra)
-    // the PREFIX sampler (the registered-query pin): ids beyond the
-    // bound are out of sample by construction
-    def book(df: org.apache.spark.sql.DataFrame): Map[Int, Seq[Double]] =
-      Similarity.kmeansTrain(df, 8, 3, hashSample = false).collect()
-        .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    assert(book(emb) == book(big),
+    // k = 2, sampleN = 32: the bound (32) is below n, so the xxhash64
+    // threshold rejects most rows. A rejected row's new embedding (same
+    // ids, so the same n and threshold) must not move the book by one
+    // bit; an accepted row's must.
+    val (k, sampleN) = (2, 32)
+    val n = emb.count()
+    val inSample = pmod(xxhash64(col("vec_id")), lit(1000000L)) <
+      math.max(sampleN, 8 * k) * 1000000L / n
+    def perturbed(rows: Column): DataFrame = emb.withColumn("embedding",
+      when(rows, transform(col("embedding"), x => x * 2 + 0.25f))
+        .otherwise(col("embedding")))
+    def book(df: DataFrame) =
+      bookBits(Similarity.kmeansTrain(df, k, 3, sampleN))
+    assert(emb.filter(!inSample).count() > n / 2)
+    assert(book(perturbed(!inSample)) == book(emb),
       "out-of-sample rows must not change the trained book")
+    assert(book(perturbed(inSample)) != book(emb))
+    val big = perturbed(!inSample)
     val assigned = Similarity.kmeansAssignWith(big,
-      Similarity.kmeansTrain(big, 8, 3, hashSample = false))
-    assert(assigned.count() == big.count(),
+      Similarity.kmeansTrain(big, k, 3, sampleN))
+    assert(assigned.count() == n,
       "the assignment pass must cover the whole corpus")
-    assert(assigned.filter(col("vec_id") >= 100000L).count() == 30)
   }
 
-  test("hash-sampled training: equals the prefix sampler when the bound " +
-      "covers the corpus, trains where the prefix sampler cannot, and " +
-      "is deterministic under a binding bound") {
-    def book(df: org.apache.spark.sql.DataFrame,
-        hash: Boolean): Map[Int, Seq[Double]] =
-      Similarity.kmeansTrain(df, 8, 3, hashSample = hash).collect()
+  test("hash-sampled training: shifted ids, same book; binding bound, " +
+      "deterministic") {
+    def book(df: DataFrame): Map[Int, Seq[Double]] =
+      Similarity.kmeansTrain(df, 8, 3).collect()
         .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    // gate corpus (n=500 <= 4096): both samplers see the same rows, so
-    // the books — and every oracle snapshot — are sampler-agnostic
-    assert(book(emb, hash = false) == book(emb, hash = true))
-    // gappy id space (ids shifted by 1e6): the prefix sampler sees ZERO
-    // rows and fails LOUDLY at init (never a silent replica divergence)
+    // gappy id space (ids shifted by 1e6): n <= bound takes the whole
+    // corpus, and the order-preserving shift keeps the init, so the
+    // book is the dense corpus's
     val gappy = emb.select((col("vec_id") + 1000000L).as("vec_id"),
       col("embedding"), col("label"))
-    intercept[IllegalArgumentException] {
-      Similarity.kmeansTrain(gappy, 8, 3, hashSample = false).collect()
-    }
-    // ...while the hash sampler — the DEFAULT (r14 verdict item 8) —
-    // trains: n <= bound degenerates to the whole corpus, and
-    // order-preserving id shift -> identical init -> identical book
-    assert(book(gappy, hash = true) == book(emb, hash = false),
+    assert(book(gappy) == book(emb),
       "hash sampler must train the dense corpus's book on shifted ids")
-    val defaultBook = Similarity.kmeansTrain(gappy, 8, 3).collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-    assert(defaultBook == book(gappy, hash = true),
-      "the production default must be the hash sampler")
-    // binding bound (n=500 > bound=32): deterministic across runs
-    val b1 = Similarity.kmeansTrain(emb, 2, 2, sampleN = 32,
-      hashSample = true).collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
-    val b2 = Similarity.kmeansTrain(emb, 2, 2, sampleN = 32,
-      hashSample = true).collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+    // binding bound (n > bound = 32): deterministic across runs
+    val b1 = Similarity.kmeansTrain(emb, 2, 2, sampleN = 32)
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
+    val b2 = Similarity.kmeansTrain(emb, 2, 2, sampleN = 32)
+      .collect().map(r => (r.getInt(0), r.getSeq[Double](1)))
     assert(b1.toSeq == b2.toSeq, "hash sampling must be deterministic")
   }
 
@@ -154,21 +138,17 @@ class SimilaritySpec extends SparkSpec {
     * driver, kept whole (sampler, init, rounds) as the reference
     * the trained book must equal bit for bit. */
   private def sparkLoopBook(corpus: DataFrame, k: Int, iters: Int,
-      sampleN: Int = 4096, hashSample: Boolean = true): DataFrame = {
+      sampleN: Int = 4096): DataFrame = {
     import org.apache.spark.sql.GraftFreshStats.{checkpointFresh, unpersistCheckpoints}
     import org.apache.spark.sql.types._
     val bound = math.max(sampleN, 8 * k)
     val base = corpus.select(col("vec_id"),
       transform(col("embedding"), x => x.cast("double")).as("cv"))
+    val n = corpus.count()
     val sampled =
-      if (!hashSample) base.filter(col("vec_id") < bound)
-      else {
-        val n = corpus.count()
-        if (n <= bound) base
-        else base.filter(
-          pmod(xxhash64(col("vec_id")), lit(1000000L)) <
-            bound * 1000000L / n)
-      }
+      if (n <= bound) base
+      else base.filter(
+        pmod(xxhash64(col("vec_id")), lit(1000000L)) < bound * 1000000L / n)
     val c = checkpointFresh(sampled)
     val init = c.orderBy("vec_id").limit(k)
       .select(col("vec_id"), col("cv")).collect()
@@ -211,22 +191,19 @@ class SimilaritySpec extends SparkSpec {
       "bit: gate corpus, sampleN = 32, 8k > sampleN, an empty cluster, " +
       "a score tie") {
     import spark.implicits._
-    def same(corpus: DataFrame, k: Int, iters: Int, sampleN: Int,
-        hash: Boolean): Map[Int, Seq[Long]] = {
-      val got = bookBits(
-        Similarity.kmeansTrain(corpus, k, iters, sampleN, hash))
-      assert(got == bookBits(sparkLoopBook(corpus, k, iters, sampleN, hash)),
-        s"k=$k iters=$iters sampleN=$sampleN hash=$hash")
+    def same(corpus: DataFrame, k: Int, iters: Int,
+        sampleN: Int): Map[Int, Seq[Long]] = {
+      val got = bookBits(Similarity.kmeansTrain(corpus, k, iters, sampleN))
+      assert(got == bookBits(sparkLoopBook(corpus, k, iters, sampleN)),
+        s"k=$k iters=$iters sampleN=$sampleN")
       got
     }
-    for (hash <- Seq(true, false)) {
-      // the gate corpus at the registered config
-      same(emb, 8, 3, 4096, hash)
-      // a binding bound (n > 32): the hash sampler drops rows
-      same(emb, 2, 3, 32, hash)
-      // 8k > sampleN: the bound is 8k
-      same(emb, 8, 3, 32, hash)
-    }
+    // the gate corpus at the registered config
+    same(emb, 8, 3, 4096)
+    // a binding bound (n > 32): the sampler drops rows
+    same(emb, 2, 3, 32)
+    // 8k > sampleN: the bound is 8k
+    same(emb, 8, 3, 32)
     // ids 0 and 1 share a direction, so every vector scores the same
     // against clusters 0 and 1: the tie goes to cluster 0, cluster 1
     // wins no vector and leaves the book
@@ -234,16 +211,14 @@ class SimilaritySpec extends SparkSpec {
       (0L, Array(1f, 0f)), (1L, Array(2f, 0f)), (2L, Array(0f, 1f)),
       (3L, Array(0.9f, 0.1f)), (4L, Array(0.2f, 0.8f)))
       .toDF("vec_id", "embedding")
-    for (hash <- Seq(true, false))
-      assert(same(tied, 3, 3, 4096, hash).keySet == Set(0, 2),
-        "the cluster that wins no vector must leave the book")
+    assert(same(tied, 3, 3, 4096).keySet == Set(0, 2),
+      "the cluster that wins no vector must leave the book")
     // a null embedding adds to no centroid; as an init row its null
     // centroid scores null, which the loop's min orders first
     val withNull = tied.unionByName(
       Seq((5L, null: Array[Float])).toDF("vec_id", "embedding"))
-    same(withNull, 3, 3, 4096, hash = true)
-    same(withNull.withColumn("vec_id", (col("vec_id") + 1) % 6), 3, 3,
-      4096, hash = true)
+    same(withNull, 3, 3, 4096)
+    same(withNull.withColumn("vec_id", (col("vec_id") + 1) % 6), 3, 3, 4096)
   }
 
   test("kmeansTrain rejects a repeated vec_id at every k") {
@@ -253,9 +228,9 @@ class SimilaritySpec extends SparkSpec {
       (2L, Array(0.9f, 0.1f))).toDF("vec_id", "embedding")
     // k = 2 keeps the bound at sampleN; k = 2 with sampleN = 8 makes the
     // bound 8k = 16 instead
-    for ((k, sampleN) <- Seq((2, 4096), (2, 8)); hash <- Seq(true, false)) {
+    for ((k, sampleN) <- Seq((2, 4096), (2, 8))) {
       val e = intercept[IllegalArgumentException] {
-        Similarity.kmeansTrain(repeated, k, 3, sampleN, hash)
+        Similarity.kmeansTrain(repeated, k, 3, sampleN)
       }
       assert(e.getMessage.contains("vec_id 1 repeats"), e.getMessage)
     }

@@ -10,14 +10,13 @@ half-up sums — run over any corpus directory. Every float op used
 decimal sums are order-independent, so the result is bit-identical to the
 engine's snapshot while being produced by a different implementation.
 
-Training sample (mirrors the engine's web-scale contract, the HASH
-sampler that is kmeansTrain's library default since r16): with bound =
-max(4096, 8*k), all rows when n <= bound, else rows where
+Training sample (mirrors the engine's web-scale contract, kmeansTrain's
+one sampler, an xxhash64 threshold): with bound = max(4096, 8*k), all
+rows when n <= bound, else rows where
 pmod(xxhash64(vec_id), 1e6) < bound*1e6 // n — a bit-exact replica of
 Spark's XxHash64 long path (seed 42; a public, fixed algorithm, ported
 below and verified value-for-value against the engine). At the sf0.01
-gate corpus (n=500 <= bound) the sample is the whole corpus, so the
-committed gate snapshots are sampler-agnostic.
+gate corpus (n=500 <= bound) the sample is the whole corpus.
 
 Usage: python3 tools/derive_kmeans.py <sfDir> <k> [iters=3]
 Prints the `(cluster, [centroid...])` VALUES rows the oracle embeds.

@@ -33,8 +33,8 @@ import duckdb
 
 
 def kmeans_rows(sf_dir, k, iters=3):
-    # hash-sampled training rows — the engine's kmeansTrain default
-    # since r16 (bit-exact XxHash64 replica in derive_kmeans)
+    # hash-sampled training rows, kmeansTrain's sampler (bit-exact
+    # XxHash64 replica in derive_kmeans)
     con = duckdb.connect()
     vs, n = derive_kmeans.sample_rows(con, sf_dir, k)
     cents = derive_kmeans.train(vs, k, iters)
