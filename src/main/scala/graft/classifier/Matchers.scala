@@ -5616,28 +5616,13 @@ object ProtocolMatchers {
     RootBlock(root.children.flatMap(walk))
   }
 
-  /** Registry with the interface-dependent matchers appended (the
-    * per-trace interface map is classify-call state, not global). */
-  def registryWith(interfaces: Map[String, String]): Seq[BlockMatcher] =
-    registryWith(interfaces, Map.empty, Map.empty)
-
-  def registryWith(interfaces: Map[String, String],
-      jettonWallets: Map[String, String]): Seq[BlockMatcher] =
-    registryWith(interfaces, jettonWallets, Map.empty)
-
-  /** Registry with the per-trace jetton-wallet repository applied: the
-    * matchers that resolve asset identity (StonFi v2 swap/withdraw,
-    * DeDust first-asset deposit) are swapped for resolver-bound
-    * instances — the Scala analogue of the reference's
+  /** Registry with the per-trace dims applied (a non-empty map binds its
+    * resolver variant; the per-trace interface map is classify-call
+    * state, not global): the matchers that resolve asset identity (StonFi
+    * v2 swap/withdraw, DeDust first-asset deposit) are swapped for
+    * resolver-bound instances — the Scala analogue of the reference's
     * interface_repository.get_jetton_wallet lookups (swaps.py:338-352,
     * liquidity.py asset resolution). */
-  def registryWith(interfaces: Map[String, String],
-      jettonWallets: Map[String, String],
-      nftItems: Map[String, NftItemInfo]): Seq[BlockMatcher] =
-    registryForDims(Some(interfaces).filter(_.nonEmpty),
-      Some(jettonWallets).filter(_.nonEmpty),
-      Some(nftItems).filter(_.nonEmpty))
-
   def registryWith(interfaces: Map[String, String],
       jettonWallets: Map[String, String],
       nftItems: Map[String, NftItemInfo],

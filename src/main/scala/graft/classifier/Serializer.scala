@@ -1027,19 +1027,13 @@ object Classifier {
       jettonWallets: Map[String, String] = Map.empty,
       nftItems: Map[String, NftItemInfo] = Map.empty,
       walletOwners: Map[String, String] = Map.empty): Seq[ActionRow] =
-    classifyWith(traceId, txs, msgsByTx,
+    classifyStatedWith(traceId, txs, msgsByTx,
       ProtocolMatchers.registryWith(interfaces, jettonWallets, nftItems,
-        walletOwners))
+        walletOwners))._1
 
-  /** classify with an explicit matcher registry — the DataFrame-dims
-    * path (ClassifyJob cogroup) binds per-trace resolver maps via
-    * registryForDims and calls this. */
-  def classifyWith(traceId: String, txs: Seq[TxLite],
-      msgsByTx: Map[String, Seq[MsgLite]],
-      registry: Seq[Matching.BlockMatcher]): Seq[ActionRow] =
-    classifyStatedWith(traceId, txs, msgsByTx, registry)._1
-
-  /** classifyWith plus the trace's classification_state — the
+  /** classify with an explicit matcher registry (the DataFrame-dims
+    * path, `ClassifyJob.classifyGroup`, binds per-trace resolver maps via
+    * registryForDims), plus the trace's classification_state — the
     * process_trace result (trace_processor.py:29-72,
     * event_classifier.py:334-343): 'ok' normally, 'broken' when any
     * serialized block carries the broken flag, 'failed' when the full

@@ -176,27 +176,31 @@ object ApiQueries {
   }
 
   /** /multisig/wallets (crud_multisig.go:13-59): signers-OR-proposers
-    * array overlap. */
+    * array overlap, ordered by the insert serial `id` (the reference's
+    * ORDER BY m.id), here n_nationkey — the oracle's `threshold`. */
   val a09 = Q("a09_multisig_wallets",
     """SELECT n_name AS address, cast(n_nationkey AS bigint) AS threshold
       |FROM nation
       |WHERE concat('0:', n_regionkey) = '0:2'
       |   OR concat('0:', n_nationkey) = '0:2'
       |   OR concat('0:', n_nationkey % 5) = '0:2'
-      |ORDER BY address ASC LIMIT 100""".stripMargin) { (s, dir) =>
+      |ORDER BY threshold ASC LIMIT 100""".stripMargin) { (s, dir) =>
     val multisig = T.nation(s, dir).select(
       col("n_name").as("address"),
+      col("n_nationkey").cast("long").as("id"),
       col("n_nationkey").cast("long").as("threshold"),
       array(concat(lit("0:"), col("n_regionkey").cast("string")),
         concat(lit("0:"), col("n_nationkey").cast("string"))).as("signers"),
       array(concat(lit("0:"), (col("n_nationkey") % 5).cast("string")))
         .as("proposers"))
-    QueryLayer.multisigByWallet(multisig, Seq("0:2"), descending = false)
+    QueryLayer.multisigByRequest(multisig, wallets = Seq("0:2"),
+        descending = false)
       .select("address", "threshold")
   }
 
-  /** /dns/records (crud_dns.go:22-36): one wallet's records, shortest
-    * domain first. */
+  /** /dns/records (crud_dns.go:22-40), wallet arm: one wallet's records,
+    * shortest domain first. The nft_item_address tie-break never fires:
+    * the wallet's domains (c_name) are unique. */
   val a10 = Q("a10_dns_records",
     """SELECT c_name AS domain, concat('0:', c_custkey) AS nft_item_address
       |FROM customer WHERE concat('0:', c_nationkey) = '0:5'
@@ -206,7 +210,7 @@ object ApiQueries {
       concat(lit("0:"), col("c_nationkey").cast("string")).as("dns_wallet"),
       concat(lit("0:"), col("c_custkey").cast("string"))
         .as("nft_item_address"))
-    QueryLayer.dnsRecords(dns, "0:5")
+    QueryLayer.dnsByRequest(dns, Some("0:5"), None)
       .select("domain", "nft_item_address")
   }
 
@@ -603,7 +607,7 @@ object ApiQueries {
             array(lit("layerzero_send")))
           .otherwise(array().cast("array<string>")).as("ancestor_type"),
         col("event_id").cast("long").as("end_utime"))
-    QueryLayer.actionsWithShortcuts(acts, Seq("nft.v3", "cocoon"), 200)
+    QueryLayer.actions(acts, ActionTypes.expand(Seq("nft.v3", "cocoon")), 200)
       .select("trace_id", "type", "end_utime", "action_id")
   }
 

@@ -364,79 +364,17 @@ object Curation {
 
   // ---------------------------------------------------------------- d21
 
-  /** Distributed BPE-merge training — the tokenizer-TRAINING step of a
-    * data pipeline (d05 counts with a trained tokenizer's pre-split;
-    * this learns the merge table itself). Classic BPE trains on the
-    * DISTINCT-WORD HISTOGRAM, not raw text, so the working set is
-    * vocabulary-sized and corpus-size-independent: a 100-TB corpus with
-    * a 10⁷-word vocabulary trains on 10⁷ narrow rows.
-    *
-    * Each round: explode each word's adjacent symbol pairs weighted by
-    * word frequency → groupBy(pair) sum → the single most frequent pair
-    * (ties broken lexicographically, so training is deterministic on
-    * any partitioning) becomes the next merge; the merge is applied to
-    * the symbol arrays as a left-to-right non-overlapping fold — a pure
-    * `aggregate` column program, no UDF. One tiny top-1 collect per
-    * round reaches the driver (the merge table IS driver state, exactly
-    * like real tokenizer training); production variants batch the top-K
-    * non-interacting pairs per round to cut rounds — same plan shape.
-    *
-    * Returns the learned merge table: (merge_rank, left, right, freq). */
-  def bpeTrain(docs: DataFrame, nMerges: Int): Seq[(Int, String, String, Long)] = {
-    var words = docs
-      .select(explode(toks(col("text"))).as("w"))
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .select(expr("filter(split(w, ''), x -> x <> '')").as("syms"), col("n"))
-      .localCheckpoint()
-    // loop state: checkpointFresh, or plan-stats compound across rounds
-    words = org.apache.spark.sql.GraftFreshStats.freshStats(words)
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    for (rank <- 1 to nMerges) {
-      val top = words
-        .select(col("n"), posexplode(expr(
-          // size guard: sequence(1, 0) would count DOWN and fabricate
-          // null pairs for single-symbol words
-          """CASE WHEN size(syms) >= 2 THEN
-               transform(sequence(1, size(syms) - 1),
-                 i -> struct(syms[i-1] AS a, syms[i] AS b))
-             ELSE CAST(array() AS array<struct<a:string,b:string>>) END"""))
-          .as(Seq("i", "p")))
-        .groupBy(col("p.a"), col("p.b")).agg(sum("n").as("freq"))
-        .orderBy(col("freq").desc, col("a"), col("b"))
-        .limit(1).collect()
-      if (top.nonEmpty) {
-        val (a, b, f) = (top(0).getString(0), top(0).getString(1),
-          top(0).getLong(2))
-        merges += ((rank, a, b, f))
-        val merged = concat_ws("", lit(a), lit(b))
-        words = words.select(
-          aggregate(col("syms"),
-            expr("CAST(array() AS array<string>)"),
-            (acc, s) => when(
-              size(acc) > 0 && element_at(acc, -1) === lit(a) && s === lit(b),
-              concat(slice(acc, lit(1), size(acc) - 1), array(merged)))
-              .otherwise(concat(acc, array(s)))).as("syms"),
-          col("n"))
-        val prev = words
-        words = checkpointFresh(words)
-        unpersistCheckpoints(prev) // superseded round: release its blocks
-      }
-    }
-    unpersistCheckpoints(words) // result is the driver-side merge table
-    merges.result()
-  }
-
   /** Learned merge table for 12 merges over the corpus. Training is
     * iterative (no closed-form SQL), so the oracle is a TRANSCRIBED
     * FIXTURE of the gate corpus's merge table — derived by an
     * INDEPENDENT plain-Python BPE over the raw parquet (histogram →
     * argmax by (freq desc, pair asc) → left-to-right fold, 12 rounds),
     * not fed back from the engine: a training divergence in pair
-    * counting, tie-breaking, or the apply fold fails the hash.
-    * CurationSpec additionally pins exact equality against a
-    * plain-Scala BPE on the same histogram and bit-identity of the
-    * batched trainer. Valid for the sf0.01 gate corpus only (like the
-    * d26 prefix and d27 merges). */
+    * counting, tie-breaking, the batch selection or the apply fold fails
+    * the hash. CurationSpec additionally pins [[bpeTrain]] to a
+    * plain-Scala sequential BPE on the same histogram for several batch
+    * sizes. Valid for the sf0.01 gate corpus only (like the d26 prefix
+    * and d27 merges). */
   val d21 = graft.Q("d21_bpe_merges",
     """SELECT CAST(merge_rank AS INT) AS merge_rank,
       |  "left", "right", CAST(freq AS BIGINT) AS freq
@@ -453,17 +391,6 @@ object Curation {
       .orderBy("merge_rank")
   }
 
-  /** Adjacent-pair histogram of a (syms, n) word table — the per-round
-    * count step shared by sequential and batched BPE training. */
-  private def bpePairCounts(words: DataFrame): DataFrame = words
-    .select(col("n"), posexplode(expr(
-      """CASE WHEN size(syms) >= 2 THEN
-           transform(sequence(1, size(syms) - 1),
-             i -> struct(syms[i-1] AS a, syms[i] AS b))
-         ELSE CAST(array() AS array<struct<a:string,b:string>>) END"""))
-      .as(Seq("i", "p")))
-    .groupBy(col("p.a"), col("p.b")).agg(sum("n").as("freq"))
-
   /** One left-to-right non-overlapping merge fold over a symbol array
     * column (the BPE apply step). */
   private def bpeApplyOne(syms: Column, a: String, b: String): Column =
@@ -474,10 +401,20 @@ object Curation {
         concat(slice(acc, lit(1), size(acc) - 1), array(lit(a + b))))
         .otherwise(concat(acc, array(s))))
 
-  /** BPE-merge training with TOP-K BATCHED rounds: bit-identical to
-    * `bpeTrain` but amortizing one Spark count job over up to `batchK`
-    * merges, so a 30k-merge production vocabulary costs thousands of
-    * rounds, not 30k.
+  /** Distributed BPE-merge training — the tokenizer-TRAINING step of a
+    * data pipeline (d05 counts with a trained tokenizer's pre-split;
+    * this learns the merge table itself). Classic BPE trains on the
+    * DISTINCT-WORD HISTOGRAM, not raw text, so the working set is
+    * vocabulary-sized and corpus-size-independent: a 100-TB corpus with
+    * a 10⁷-word vocabulary trains on 10⁷ narrow rows.
+    *
+    * Sequential BPE takes, each round, the single most frequent adjacent
+    * pair (word-frequency weighted; ties broken lexicographically, so
+    * training is deterministic on any partitioning) and applies it as a
+    * left-to-right non-overlapping fold. This trainer is bit-identical to
+    * that but amortizes one Spark count job over up to `batchK` merges,
+    * so a 30k-merge production vocabulary costs thousands of rounds, not
+    * 30k. The apply step is a pure `aggregate` column program, no UDF.
     *
     * The batch is chosen so sequential equivalence is PROVABLE, not
     * heuristic: walk the (freq DESC, a, b) sorted pair list and select
@@ -495,22 +432,34 @@ object Curation {
     *    unselected, so it is also strictly below.
     * When the strictness guard empties the batch (adjacent interacting
     * ties), the round degrades to the always-correct top-1. Per-round
-    * driver state is ≤ fetchN narrow rows — same bounded-by-construction
-    * argument as the sequential top-1 collect. */
-  def bpeTrainBatched(docs: DataFrame, nMerges: Int,
+    * driver state is ≤ fetchN narrow rows (the merge table IS driver
+    * state, exactly like real tokenizer training).
+    *
+    * Returns the learned merge table: (merge_rank, left, right, freq). */
+  def bpeTrain(docs: DataFrame, nMerges: Int,
       batchK: Int = 8): Seq[(Int, String, String, Long)] = {
     var words = docs
       .select(explode(toks(col("text"))).as("w"))
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(expr("filter(split(w, ''), x -> x <> '')").as("syms"), col("n"))
       .localCheckpoint()
+    // loop state: checkpointFresh, or plan-stats compound across rounds
     words = org.apache.spark.sql.GraftFreshStats.freshStats(words)
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 0
     var exhausted = false
     while (rank < nMerges && !exhausted) {
       val fetchN = batchK * 4 + 1
-      val top = bpePairCounts(words)
+      val top = words
+        .select(col("n"), posexplode(expr(
+          // size guard: sequence(1, 0) would count DOWN and fabricate
+          // null pairs for single-symbol words
+          """CASE WHEN size(syms) >= 2 THEN
+               transform(sequence(1, size(syms) - 1),
+                 i -> struct(syms[i-1] AS a, syms[i] AS b))
+             ELSE CAST(array() AS array<struct<a:string,b:string>>) END"""))
+          .as(Seq("i", "p")))
+        .groupBy(col("p.a"), col("p.b")).agg(sum("n").as("freq"))
         .orderBy(col("freq").desc, col("a"), col("b"))
         .limit(fetchN).collect()
         .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
@@ -584,7 +533,7 @@ object Curation {
         count(lit(1)).as("n_words"))
   }
 
-  /** The merge table `bpeTrainBatched(nMerges = 8)` deterministically
+  /** The merge table `bpeTrain(nMerges = 8)` deterministically
     * learns on the sf0.01 gate corpus — a transcribed fixture (like the
     * d26 permutation masks), NOT fed back from the engine at run time.
     * Valid only for the gate corpus the driver verifies against; a
@@ -600,8 +549,9 @@ object Curation {
     * strings (single-pass `replace` has exactly the fold's
     * earliest-match non-overlap semantics; token count = separators+1),
     * using the committed [[gateMerges8]] fixture. Training itself stays
-    * iterative/engine-side (d21 rows-only); CurationSpec pins both
-    * against a plain-Scala sequential reference. */
+    * iterative/engine-side (d21 checks its merge table); CurationSpec
+    * pins training and encode against a plain-Scala sequential
+    * reference. */
   val d27 = Q("d27_bpe_encode", {
     val symExpr = gateMerges8.foldLeft(
       "array_to_string(string_split(w, ''), chr(31))") {
@@ -617,7 +567,7 @@ object Curation {
        |  CAST(count(*) AS BIGINT) AS n_words
        |FROM enc GROUP BY doc_id ORDER BY doc_id""".stripMargin
   }) { (s, dir) =>
-    val merges = bpeTrainBatched(T.documents(s, dir), nMerges = 8)
+    val merges = bpeTrain(T.documents(s, dir), nMerges = 8)
     bpeEncode(T.documents(s, dir), merges).orderBy("doc_id")
   }
 

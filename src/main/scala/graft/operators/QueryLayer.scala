@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *    the ORDER BY key follows the filter shape so that, on a properly
   *    laid-out table (partitioned by mc_seqno bucket, sorted within
   *    partitions by (account, lt)), the sort rides the storage order.
-  *  - O3 limit clamps: default 100, max 1000, offset ≥ 0 (crud.go:31-50).
+  *  - O3 limit clamps: default 100, max 1000, offset ≥ 0 (crud.go:31-50),
+  *    applied by [[page]] on every paged route.
   *  - O4 four-key deterministic action ordering (crud_actions.go:184-198).
   */
 object QueryLayer {
@@ -22,7 +23,16 @@ object QueryLayer {
 
   def clampLimit(limit: Int): Int =
     if (limit <= 0) DefaultLimit else math.min(limit, MaxLimit)
-  def clampOffset(offset: Int): Int = math.max(offset, 0)
+
+  /** The one pagination of every paged route: sort on `keys`, clamp, and
+    * take offset + limit rows before dropping the offset, so the plan is
+    * one TakeOrderedAndProject of off+lim rows — no global sort
+    * materializes at any scale (PlanSpec). */
+  private def page(df: DataFrame, keys: Seq[Column], limit: Int,
+      offset: Int = 0): DataFrame = {
+    val off = math.max(offset, 0)
+    df.orderBy(keys: _*).limit(off + clampLimit(limit)).offset(off)
+  }
 
   /** Typed request (models/request.go:25-208 analogue). */
   case class TxRequest(
@@ -58,8 +68,7 @@ object QueryLayer {
     r.utimeMin.foreach(v => df = df.filter(col("now") >= v))
     r.utimeMax.foreach(v => df = df.filter(col("now") <= v))
     r.mcSeqno.foreach(v => df = df.filter(col("mc_block_seqno") === v))
-    df.orderBy(txSortKeys(r): _*)
-      .offset(clampOffset(r.offset)).limit(clampLimit(r.limit))
+    page(df, txSortKeys(r), r.limit, r.offset)
   }
 
   /** Nested hydration (J11/O5): transactions + in_msg struct + out_msgs
@@ -98,14 +107,16 @@ object QueryLayer {
   }
 
   /** traces by account (J4 semi-join — EXISTS, not JOIN, to avoid probe
-    * fan-out dup rows; crud_traces.go:59-98). */
+    * fan-out dup rows; crud_traces.go:59-98). The benchmark's read path
+    * calls this and checks its rows, so it stays beside
+    * [[tracesByRequest]]: its tie-break is trace_id ASC, the request
+    * form's follows the direction (DESC). */
   def tracesByAccount(traces: DataFrame, txs: DataFrame,
       account: String, limit: Int = DefaultLimit): DataFrame =
-    traces.join(
+    page(traces.join(
         txs.filter(col("account") === account).select("trace_id"),
-        Seq("trace_id"), "left_semi")
-      .orderBy(col("end_lt").desc, col("trace_id"))
-      .limit(clampLimit(limit))
+        Seq("trace_id"), "left_semi"),
+      Seq(col("end_lt").desc, col("trace_id")), limit)
 
   /** Typed traces request (crud_traces.go:13-115): the full GET
     * /api/v3/traces switch surface — end_utime range flips the sort
@@ -156,18 +167,8 @@ object QueryLayer {
     val keys =
       if (orderByNow) Seq(dir(col("end_utime")), dir(col("trace_id")))
       else Seq(dir(col("end_lt")), dir(col("trace_id")))
-    val off = clampOffset(r.offset)
-    df.orderBy(keys: _*).limit(off + clampLimit(r.limit)).offset(off)
+    page(df, keys, r.limit, r.offset)
   }
-
-  /** actions for RAW `supported_action_types` request input — shortcut
-    * names (v1..v4/latest, domain groups) expand through
-    * [[ActionTypes.expand]] (recursive resolution + always-∪-v1,
-    * action_versioning.go:108-131) before the P8 filter, exactly the
-    * reference handler's order of operations. Oracle-checked as a22. */
-  def actionsWithShortcuts(actionsDf: DataFrame, requested: Seq[String],
-      limit: Int = DefaultLimit): DataFrame =
-    actions(actionsDf, ActionTypes.expand(requested), limit)
 
   /** Typed actions request (crud_actions.go:78-198 analogue): the O4
     * four-key sort with its two switch axes — clock (order_by_now flips
@@ -257,47 +258,37 @@ object QueryLayer {
           .filter(col("__rk") === 1).drop("__rk")
       case None => filtered
     }
-    val off = clampOffset(r.offset)
-    deduped
-      .orderBy(sortKeys: _*)
-      .limit(off + clampLimit(r.limit))
-      .offset(off)
+    page(deduped, sortKeys, r.limit, r.offset)
   }
 
-  /** actions with the P8 hierarchical filter + O4 sort contract. */
+  /** actions with the P8 hierarchical filter + O4 sort contract. It stays
+    * beside [[actionsByRequest]] because the supported-types suppression
+    * and a03's ascending trace_end_utime sort are not part of
+    * [[ActionsRequest]]. RAW `supported_action_types` shortcut names
+    * (v1..v4/latest, domain groups) go through [[ActionTypes.expand]]
+    * first (recursive resolution + always-∪-v1,
+    * action_versioning.go:108-131), the reference handler's order of
+    * operations; a22 checks that against its oracle. */
   def actions(actionsDf: DataFrame, supported: Seq[String],
       limit: Int = DefaultLimit): DataFrame = {
     val types = array(supported.map(lit): _*)
-    actionsDf
-      .filter(col("type").isin(supported: _*)
-        && !arrays_overlap(coalesce(col("ancestor_type"),
-          array().cast("array<string>")), types))
-      .orderBy(col("trace_end_utime"), col("trace_id"),
-        col("end_utime"), col("action_id"))
-      .limit(clampLimit(limit))
+    page(actionsDf
+        .filter(col("type").isin(supported: _*)
+          && !arrays_overlap(coalesce(col("ancestor_type"),
+            array().cast("array<string>")), types)),
+      Seq(col("trace_end_utime"), col("trace_id"), col("end_utime"),
+        col("action_id")), limit)
   }
 
-  /** top accounts by balance (A3 top-K). */
-  def topAccounts(states: DataFrame, n: Int): DataFrame =
-    states.orderBy(col("balance").desc, col("account"))
-      .select("account", "balance", "account_status")
-      .limit(clampLimit(n))
-
-  /** GET /api/v3/topAccountsByBalance (crud_accounts.go:218-237):
-    * `select account, balance from latest_account_states order by
-    * balance desc` with limit/offset batching. The account tie-break
-    * makes pagination total (the reference inherits postgres heap order
-    * on equal balances). limit+offset stays a single
-    * TakeOrderedAndProject of off+lim rows — no global sort
-    * materializes at any scale. */
+  /** GET /api/v3/topAccountsByBalance (crud_accounts.go:218-237), the
+    * A3 top-K: `select account, balance from latest_account_states
+    * order by balance desc` with limit/offset batching. The account
+    * tie-break makes pagination total (the reference inherits postgres
+    * heap order on equal balances). */
   def topAccountsByBalance(states: DataFrame, limit: Int = 10,
-      offset: Int = 0): DataFrame = {
-    val off = clampOffset(offset)
-    states.orderBy(col("balance").desc, col("account"))
-      .select("account", "balance")
-      .limit(off + clampLimit(limit))
-      .offset(off)
-  }
+      offset: Int = 0): DataFrame =
+    page(states.select("account", "balance"),
+      Seq(col("balance").desc, col("account")), limit, offset)
 
   /** W1 DISTINCT ON: shortest DNS domain per wallet (crud.go:297-300). */
   def shortestDomainPerWallet(dns: DataFrame): DataFrame = {
@@ -332,8 +323,8 @@ object QueryLayer {
     r.ltMin.foreach(v => df = df.filter(col("start_lt") >= v))
     r.ltMax.foreach(v => df = df.filter(col("start_lt") <= v))
     val dir: Column => Column = c => if (r.descending) c.desc else c.asc
-    df.orderBy(dir(col("gen_utime")), dir(col("seqno")), dir(col("workchain")))
-      .limit(clampLimit(r.limit))
+    page(df, Seq(dir(col("gen_utime")), dir(col("seqno")),
+      dir(col("workchain"))), r.limit)
   }
 
   /** GET /api/v3/messages (crud_messages.go:14-105): filters on
@@ -394,13 +385,12 @@ object QueryLayer {
       "bounced", "import_fee", "body_hash", "init_state_hash",
       "msg_hash_norm")
     val restCols = messagesDf.columns.toSeq.filter(restAllow)
-    df.groupBy(restCols.map(col): _*)
-      .agg(max(when(col("direction") === "in", col("tx_hash")))
-          .as("in_tx_hash"),
-        max(when(col("direction") === "out", col("tx_hash")))
-          .as("out_tx_hash"))
-      .orderBy(dir(col(orderCol)), dir(col("msg_hash")))
-      .limit(clampLimit(r.limit))
+    page(df.groupBy(restCols.map(col): _*)
+        .agg(max(when(col("direction") === "in", col("tx_hash")))
+            .as("in_tx_hash"),
+          max(when(col("direction") === "out", col("tx_hash")))
+            .as("out_tx_hash")),
+      Seq(dir(col(orderCol)), dir(col("msg_hash"))), r.limit)
   }
 
   /** GET /api/v3/accountStates (crud_accounts.go:14-51): IN-filters on
@@ -412,31 +402,32 @@ object QueryLayer {
     if (accounts.nonEmpty) df = df.filter(col("account").isin(accounts: _*))
     if (codeHashes.nonEmpty)
       df = df.filter(col("code_hash").isin(codeHashes: _*))
-    df.orderBy(col("account")).limit(MaxLimit)
+    page(df, Seq(col("account")), MaxLimit)
   }
 
+  /** The code-hash wallet catalog parse (wallet_parse.go:78-114): wallet
+    * type, seqno, wallet_id and the v5 signature flag from the data BOC;
+    * unknown hashes come back with isWallet=false. The catalog probe is a
+    * scalar lookup inside the decode (no join): the catalog is a
+    * constant. */
+  private val walletParse = udf { (ch: String, db: String) =>
+    graft.functions.WalletParse.parse(ch, db)
+  }
+  private val walletFields = Seq(col("w.walletType").as("wallet_type"),
+    col("w.seqno").as("seqno"), col("w.walletId").as("wallet_id"))
+
   /** GET /api/v3/walletStates (main.go:2333, crud_accounts.go:199-216):
-    * account states run through the code-hash wallet catalog
-    * (wallet_parse.go:78-114) — wallet type, seqno, wallet_id and the v5
-    * signature flag extracted from the data BOC; unknown hashes pass
-    * through with is_wallet=false. The catalog probe is a scalar lookup
-    * inside the decode (no join): the catalog is a constant. */
+    * account states run through [[walletParse]]; unknown hashes pass
+    * through with is_wallet=false. */
   def walletStates(states: DataFrame, accounts: Seq[String] = Nil): DataFrame = {
-    val parse = udf { (ch: String, db: String) =>
-      graft.functions.WalletParse.parse(ch, db)
-    }
     var df = states
     if (accounts.nonEmpty) df = df.filter(col("account").isin(accounts: _*))
-    df.withColumn("w", parse(col("code_hash"), col("data_boc")))
-      .select(
-        col("account"),
-        col("w.isWallet").as("is_wallet"),
-        col("w.walletType").as("wallet_type"),
-        col("w.seqno").as("seqno"),
-        col("w.walletId").as("wallet_id"),
-        col("w.isSignatureAllowed").as("is_signature_allowed"),
-        col("code_hash"))
-      .orderBy(col("account")).limit(MaxLimit)
+    page(df.withColumn("w", walletParse(col("code_hash"), col("data_boc")))
+        .select(Seq(col("account"), col("w.isWallet").as("is_wallet")) ++
+          walletFields ++ Seq(
+            col("w.isSignatureAllowed").as("is_signature_allowed"),
+            col("code_hash")): _*),
+      Seq(col("account")), MaxLimit)
   }
 
   /** Zero transaction-hash sentinel the v2 handlers fabricate for
@@ -444,58 +435,47 @@ object QueryLayer {
     * 1726-1731). */
   private val ZeroTxHash = "AAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAAA="
 
-  /** GET /api/v3/addressInformation (main.go:1697-1741 →
-    * models/convert.go:14-32): ONE account's latest state projected to
-    * the v2 shape — balance, code/data BOCs, last-transaction pointer
-    * (lt serialized as string), status. A missing account yields the
-    * fabricated zero row (balance "0", zero tx hash, lt "0", status
-    * "uninit"). Declared as a left join from a one-row literal frame so
-    * the found/missing branch needs no driver-side action; against the
-    * account-sorted latest-states silver the probe partition-prunes. */
-  def addressInformation(states: DataFrame, account: String): DataFrame = {
-    val req = states.sparkSession.range(1)
-      .select(lit(account).as("account"))
-    req.join(states, Seq("account"), "left")
-      .select(
-        col("account"),
-        coalesce(col("balance").cast("string"), lit("0")).as("balance"),
-        col("code_boc").as("code"),
-        col("data_boc").as("data"),
+  /** ONE account's latest state for the v2 single-account routes: a left
+    * join from a one-row literal frame, so the found/missing branch needs
+    * no driver-side action; against the account-sorted latest-states
+    * silver the probe partition-prunes. */
+  private def accountLookup(states: DataFrame, account: String): DataFrame =
+    states.sparkSession.range(1).select(lit(account).as("account"))
+      .join(states, Seq("account"), "left")
+
+  /** The v2 row around the route's own `fields`: a missing account gets
+    * the fabricated zero row (balance "0", zero tx hash, lt "0", status
+    * "uninit"); the lt is serialized as a string. */
+  private def v2Row(found: DataFrame, fields: Column*): DataFrame =
+    found.select(Seq(col("account"),
+        coalesce(col("balance").cast("string"), lit("0")).as("balance")) ++
+      fields ++ Seq(
         coalesce(col("last_transaction_hash"), lit(ZeroTxHash))
           .as("last_transaction_hash"),
         coalesce(col("last_transaction_lt").cast("string"), lit("0"))
           .as("last_transaction_lt"),
-        coalesce(col("account_status"), lit("uninit")).as("status"))
-  }
+        coalesce(col("account_status"), lit("uninit")).as("status")): _*)
+
+  /** GET /api/v3/addressInformation (main.go:1697-1741 →
+    * models/convert.go:14-32): ONE account's latest state projected to
+    * the v2 shape — balance, code/data BOCs, last-transaction pointer,
+    * status. */
+  def addressInformation(states: DataFrame, account: String): DataFrame =
+    v2Row(accountLookup(states, account),
+      col("code_boc").as("code"), col("data_boc").as("data"))
 
   /** GET /api/v3/walletInformation (main.go:1624-1680 →
     * models/convert.go:34-63): the walletStates parse for ONE account,
     * gated — a row that is neither a wallet nor uninit is NOT a wallet
     * (the handler 409s; here: zero rows). Missing account → the same
     * fabricated uninit zero row as addressInformation. */
-  def walletInformation(states: DataFrame, account: String): DataFrame = {
-    val req = states.sparkSession.range(1)
-      .select(lit(account).as("account"))
-    val parse = udf { (ch: String, db: String) =>
-      graft.functions.WalletParse.parse(ch, db)
-    }
-    req.join(states, Seq("account"), "left")
-      .withColumn("w", when(col("account_status").isNotNull,
-        parse(col("code_hash"), col("data_boc"))))
-      .filter(col("account_status").isNull ||
-        col("w.isWallet") || col("account_status") === "uninit")
-      .select(
-        col("account"),
-        coalesce(col("balance").cast("string"), lit("0")).as("balance"),
-        col("w.walletType").as("wallet_type"),
-        col("w.seqno").as("seqno"),
-        col("w.walletId").as("wallet_id"),
-        coalesce(col("last_transaction_hash"), lit(ZeroTxHash))
-          .as("last_transaction_hash"),
-        coalesce(col("last_transaction_lt").cast("string"), lit("0"))
-          .as("last_transaction_lt"),
-        coalesce(col("account_status"), lit("uninit")).as("status"))
-  }
+  def walletInformation(states: DataFrame, account: String): DataFrame =
+    v2Row(accountLookup(states, account)
+        .withColumn("w", when(col("account_status").isNotNull,
+          walletParse(col("code_hash"), col("data_boc"))))
+        .filter(col("account_status").isNull ||
+          col("w.isWallet") || col("account_status") === "uninit"),
+      walletFields: _*)
 
   /** GET /api/v3/masterchainInfo (crud_blocks.go:134-157): the last and
     * first masterchain block in one pass — a single workchain=-1 scan
@@ -534,10 +514,9 @@ object QueryLayer {
     * added beyond the reference's documented gen_utime sort. */
   def masterchainBlockShardState(blocksDf: DataFrame, mcSeqno: Long,
       limit: Int = DefaultLimit): DataFrame = {
-    blocksDf.filter(col("mc_block_seqno") === mcSeqno)
-      .orderBy(col("gen_utime").desc, col("workchain"), col("shard"),
-        col("seqno"))
-      .limit(clampLimit(limit))
+    page(blocksDf.filter(col("mc_block_seqno") === mcSeqno),
+      Seq(col("gen_utime").desc, col("workchain"), col("shard"),
+        col("seqno")), limit)
   }
 
   /** GET /api/v3/jetton/masters (crud_jettons.go:15-52): IN-filters on
@@ -549,7 +528,7 @@ object QueryLayer {
     if (addresses.nonEmpty) df = df.filter(col("address").isin(addresses: _*))
     if (admins.nonEmpty)
       df = df.filter(col("admin_address").isin(admins: _*))
-    df.orderBy(col("address")).limit(clampLimit(limit))
+    page(df, Seq(col("address")), limit)
   }
 
   /** GET /api/v3/nft/collections (crud_nft.go:14-52): IN-filters on
@@ -560,57 +539,36 @@ object QueryLayer {
     if (addresses.nonEmpty) df = df.filter(col("address").isin(addresses: _*))
     if (owners.nonEmpty)
       df = df.filter(col("owner_address").isin(owners: _*))
-    df.orderBy(col("address")).limit(clampLimit(limit))
+    page(df, Seq(col("address")), limit)
   }
 
-  /** GET /api/v3/multisig/wallets (crud_multisig.go:13-59): a wallet
-    * matches when it appears among a contract's signers OR proposers —
-    * the postgres array-overlap filter becomes arrays_overlap on the
-    * array columns (J6 family). */
-  def multisigByWallet(multisig: DataFrame, wallets: Seq[String],
-      descending: Boolean = true, limit: Int = DefaultLimit): DataFrame = {
-    val ws = array(wallets.map(lit): _*)
-    val dir: Column => Column = c => if (descending) c.desc else c.asc
-    multisig
-      .filter(arrays_overlap(col("signers"), ws) ||
-        arrays_overlap(col("proposers"), ws))
-      .orderBy(dir(col("address")))
-      .limit(clampLimit(limit))
-  }
-
-  /** GET /api/v3/dns/records (crud_dns.go:22-36): records of one wallet,
-    * shortest domain first, then lexicographic. */
-  def dnsRecords(dns: DataFrame, wallet: String,
-      limit: Int = DefaultLimit): DataFrame =
-    dns.filter(col("dns_wallet") === wallet)
-      .orderBy(length(col("domain")), col("domain"))
-      .limit(clampLimit(limit))
-
-  /** GET /api/v3/dns/records, BOTH arms (crud_dns.go:31-40): the wallet
-    * arm when present, else the domain arm — an XOR the route enforces.
+  /** GET /api/v3/dns/records (crud_dns.go:31-40): EXACTLY ONE of the
+    * wallet arm or the domain arm — the route 422s on both-or-neither.
     * Order: LENGTH(domain), domain (both arms), with nft_item_address
     * appended as the deterministic tie-break the reference leaves to
     * postgres heap order. */
   def dnsByRequest(dns: DataFrame, wallet: Option[String],
       domain: Option[String], limit: Int = DefaultLimit,
       offset: Int = 0): DataFrame = {
+    require(wallet.isDefined || domain.isDefined,
+      "at least one of wallet or domain is required")
+    require(wallet.isEmpty || domain.isEmpty,
+      "only one of wallet or domain should be specified")
     val filtered = wallet match {
       case Some(w) => dns.filter(col("dns_wallet") === w)
-      case None => dns.filter(col("domain") ===
-        domain.getOrElse(sys.error("dns request needs wallet or domain")))
+      case None => dns.filter(col("domain") === domain.get)
     }
-    val off = clampOffset(offset)
-    filtered
-      .orderBy(length(col("domain")), col("domain"), col("nft_item_address"))
-      .limit(off + clampLimit(limit)).offset(off)
+    page(filtered,
+      Seq(length(col("domain")), col("domain"), col("nft_item_address")),
+      limit, offset)
   }
 
-  /** GET /api/v3/multisig/wallets, full switch surface
-    * (crud_multisig.go:13-59): address IN-list AND the signers/proposers
-    * array-overlap, ordered by the insert serial `id` (the reference's
-    * ORDER BY m.id) in the requested direction. The frame must carry
-    * that serial; [[multisigByWallet]] stays the surrogate-ordered form
-    * for dumps that lack it. */
+  /** GET /api/v3/multisig/wallets (crud_multisig.go:13-59): address
+    * IN-list AND the signers/proposers match — a wallet matches when it
+    * appears among a contract's signers OR proposers, the postgres
+    * array-overlap filter as arrays_overlap on the array columns (J6
+    * family) — ordered by the insert serial `id` (the reference's ORDER
+    * BY m.id) in the requested direction. */
   def multisigByRequest(multisig: DataFrame, addresses: Seq[String] = Nil,
       wallets: Seq[String] = Nil, descending: Boolean = true,
       limit: Int = DefaultLimit, offset: Int = 0): DataFrame = {
@@ -621,9 +579,8 @@ object QueryLayer {
       df = df.filter(arrays_overlap(col("signers"), ws) ||
         arrays_overlap(col("proposers"), ws))
     }
-    val off = clampOffset(offset)
-    df.orderBy(if (descending) col("id").desc else col("id").asc)
-      .limit(off + clampLimit(limit)).offset(off)
+    page(df, Seq(if (descending) col("id").desc else col("id").asc),
+      limit, offset)
   }
 
   /** GET /api/v3/vesting, full switch surface (crud_vesting.go:75-120):
@@ -661,8 +618,7 @@ object QueryLayer {
           .filter(ownerOrSender || col("__wl"))
           .drop("__wl")
     }
-    val off = clampOffset(offset)
-    df.orderBy(col("id")).limit(off + clampLimit(limit)).offset(off)
+    page(df, Seq(col("id")), limit, offset)
   }
 
   /** Typed request for GET /api/v3/nft/items (crud_nft.go:52-124). */
@@ -672,8 +628,17 @@ object QueryLayer {
       indexIn: Seq[String] = Nil, sortByLastTransactionLt: Boolean = false,
       limit: Int = DefaultLimit, offset: Int = 0)
 
-  /** GET /api/v3/nft/items, full switch surface (crud_nft.go:52-124) on
-    * top of [[nftItems]]'s dimension joins:
+  /** GET /api/v3/nft/items (crud_nft.go:40-124): the J8 dimension
+    * left-joins — collections always, getgems sales/auctions for live
+    * on-sale ownership — under the full switch surface.
+    *
+    * Collections is an UNBOUNDED entity dim (LAYOUT.md sizes entity dims
+    * at ≤1e9 rows) — never broadcast it whole: items⋈collections runs as
+    * a co-keyed shuffle join (both sides hash on collection_address); a
+    * single-collection filter is applied to BOTH sides first so
+    * partition pruning reaches the scans. The sales/auctions joins
+    * broadcast only the filtered LIVE subsets (bounded by on-sale
+    * inventory). Switches:
     *  - owner filter site switches on include_on_sale (crud_nft.go:80-86):
     *    N.real_owner (the live getgems sale/auction owner, which the
     *    reference stores denormalized and this engine derives as
@@ -689,8 +654,7 @@ object QueryLayer {
     *  - `address` appended as the deterministic tie-break everywhere
     *    (the reference leaves ties to postgres heap order; a Spark sort
     *    must be total for stable pagination).
-    * The frame must carry the insert serial `id` for the default order;
-    * [[nftItems]] stays the surrogate-ordered form. */
+    * The frame must carry the insert serial `id` for the default order. */
   def nftItemsByRequest(items: DataFrame, collections: DataFrame,
       sales: DataFrame, auctions: DataFrame,
       r: NftItemsRequest): DataFrame = {
@@ -752,9 +716,7 @@ object QueryLayer {
         col("index").asc_nulls_last)
     if (r.sortByLastTransactionLt)
       order = Seq(col("last_transaction_lt").desc_nulls_first)
-    val off = clampOffset(r.offset)
-    df.orderBy(order :+ col("address"): _*)
-      .limit(off + clampLimit(r.limit)).offset(off)
+    page(df, order :+ col("address"), r.limit, r.offset)
   }
 
   /** Typed request shared by the token-event endpoint families
@@ -804,8 +766,7 @@ object QueryLayer {
     val keys =
       if (r.descending) Seq(orderCol.desc, col("tx_hash").desc)
       else Seq(orderCol.asc, col("tx_hash").asc)
-    df.orderBy(keys: _*)
-      .offset(clampOffset(r.offset)).limit(clampLimit(r.limit))
+    page(df, keys, r.limit, r.offset)
   }
 
   /** GET /api/v3/jetton/transfers (crud_jettons.go:117-199); aborted
@@ -867,56 +828,7 @@ object QueryLayer {
         prefix ++ Seq(bal, col("id"))
       case None => Seq(col("id"))
     }
-    df.orderBy(sortKeys: _*)
-      .offset(clampOffset(offset)).limit(clampLimit(limit))
-  }
-
-  /** GET /api/v3/nft/items (crud_nft.go:40-64): address/collection/owner
-    * filters + the J8 dimension left-joins — collections always, getgems
-    * sales/auctions for live on-sale ownership (an item listed on a
-    * getgems sale contract shows the sale's real owner).
-    *
-    * Collections is an UNBOUNDED entity dim (LAYOUT.md sizes entity dims
-    * at ≤1e9 rows) — never broadcast it whole: items⋈collections runs as
-    * a co-keyed shuffle join (both sides hash on collection_address); a
-    * `collection` filter is applied to BOTH sides first so partition
-    * pruning reaches the scans. The sales/auctions joins broadcast only
-    * the filtered LIVE subsets (bounded by on-sale inventory). */
-  def nftItems(items: DataFrame, collections: DataFrame,
-      sales: DataFrame, auctions: DataFrame,
-      owner: Option[String] = None, collection: Option[String] = None,
-      limit: Int = DefaultLimit): DataFrame = {
-    val itemsF = collection.foldLeft(items)((d, c) =>
-      d.filter(col("collection_address") === c))
-    val collsF = collection.foldLeft(
-      collections.select(col("address").as("collection_address"),
-        col("owner_address").as("collection_owner"),
-        col("collection_content")))((d, c) =>
-      d.filter(col("collection_address") === c))
-    // two-key dim joins, same contract as [[nftItemsByRequest]]
-    // (crud_nft.go:61-63): the owner must BE the contract AND the
-    // contract must point back at THIS item
-    val withDims = itemsF
-      .join(collsF, Seq("collection_address"), "left")
-      .join(broadcast(sales.filter(!col("is_complete"))
-        .select(col("address").as("__s_addr"),
-          col("nft_address").as("__s_nft"),
-          col("nft_owner_address").as("sale_real_owner"))),
-        col("owner_address") === col("__s_addr") &&
-          col("address") === col("__s_nft"), "left")
-      .join(broadcast(auctions.filter(!col("end_flag"))
-        .select(col("address").as("__a_addr"),
-          col("nft_addr").as("__a_nft"),
-          col("nft_owner").as("auction_real_owner"))),
-        col("owner_address") === col("__a_addr") &&
-          col("address") === col("__a_nft"), "left")
-      .drop("__s_addr", "__s_nft", "__a_addr", "__a_nft")
-      .withColumn("real_owner", coalesce(col("sale_real_owner"),
-        col("auction_real_owner"), col("owner_address")))
-    var df = withDims
-    owner.foreach(o => df = df.filter(col("real_owner") === o))
-    df.orderBy(col("collection_address"), col("index"), col("address"))
-      .limit(clampLimit(limit))
+    page(df, sortKeys, limit, offset)
   }
 
   /** GET /api/v3/nft/sales (crud_sales.go:20-170): getgems sales and
@@ -977,25 +889,14 @@ object QueryLayer {
       .orderBy(col("sale_type"), col("address"))
   }
 
-  /** GET /api/v3/multisig/orders (crud endpoint family): orders of a
-    * multisig, optionally pending-only (not yet sent for execution),
-    * ordered by order_seqno. approvals_mask is a 256-bit string column
-    * (§1.2) — never arithmetic. */
-  def multisigOrders(orders: DataFrame, multisigAddress: String,
-      pendingOnly: Boolean = false, limit: Int = DefaultLimit): DataFrame = {
-    var df = orders.filter(col("multisig_address") === multisigAddress)
-    if (pendingOnly) df = df.filter(!col("sent_for_execution"))
-    df.orderBy(col("order_seqno"), col("address")).limit(clampLimit(limit))
-  }
-
   /** GET /api/v3/multisig/orders, full switch surface
     * (crud_multisig.go:61-108 + the handler's 422): order-address
     * IN-list AND multisig-address IN-list (at least one required —
     * main.go's GetMultisigOrders rejects the unfiltered scan), ordered
     * by the insert serial `id` in the requested direction (default
     * DESC — crud_multisig.go:84), `address` as the deterministic
-    * tie-break. The frame must carry the serial; [[multisigOrders]]
-    * stays the legacy seqno-ordered form for dumps that lack it. */
+    * tie-break. approvals_mask is a 256-bit string column (§1.2) — never
+    * arithmetic. */
   def multisigOrdersByRequest(orders: DataFrame,
       addresses: Seq[String] = Nil, multisigs: Seq[String] = Nil,
       descending: Boolean = true, limit: Int = DefaultLimit,
@@ -1007,23 +908,9 @@ object QueryLayer {
       df = df.filter(col("address").isin(addresses: _*))
     if (multisigs.nonEmpty)
       df = df.filter(col("multisig_address").isin(multisigs: _*))
-    val off = clampOffset(offset)
-    df.orderBy(
-        (if (descending) col("id").desc else col("id").asc),
-        col("address"))
-      .limit(off + clampLimit(limit)).offset(off)
+    page(df, Seq(if (descending) col("id").desc else col("id").asc,
+      col("address")), limit, offset)
   }
-
-  /** GET /api/v3/vesting (crud_vesting.go:75-111): contracts filtered by
-    * wallet whitelist membership via an EXISTS semi-join (J4) — never an
-    * inner join, to avoid fan-out duplicate contract rows. */
-  def vestingByWhitelistedWallet(contracts: DataFrame, whitelist: DataFrame,
-      wallet: String, limit: Int = DefaultLimit): DataFrame =
-    contracts.join(
-        whitelist.filter(col("wallet_address") === wallet)
-          .select(col("vesting_contract_address").as("address")),
-        Seq("address"), "left_semi")
-      .orderBy(col("address")).limit(clampLimit(limit))
 
   /** Metadata decoration (U1 + J10, crud.go:101-108): the 3-way tagged
     * union of token entities left-joined to address_metadata. */

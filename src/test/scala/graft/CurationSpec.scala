@@ -273,18 +273,25 @@ class CurationSpec extends SparkSpec {
 
   // ---------------------------------------------------------- d21
 
-  test("bpe training equals a plain-Scala reference on the same histogram") {
-    val got = Curation.bpeTrain(docs, 8)
+  /** One left-to-right non-overlapping merge of (a, b) over a word. */
+  private def applyMerge(syms: Vector[String], a: String,
+      b: String): Vector[String] =
+    syms.foldLeft(Vector.empty[String]) { (acc, s) =>
+      if (acc.nonEmpty && acc.last == a && s == b) acc.init :+ (a + b)
+      else acc :+ s
+    }
 
-    // reference implementation over the collected word histogram
-    val hist = docs.collect()
-      .flatMap(_.getString(1).trim.split("\\s+"))
-      .groupBy(identity).view.mapValues(_.size.toLong).toMap
-    var words: Map[Vector[String], Long] = hist
-      .groupBy { case (w, _) => w.map(_.toString).toVector }
-      .view.mapValues(_.values.sum).toMap
-    val expect = Seq.newBuilder[(Int, String, String, Long)]
-    for (rank <- 1 to 8) {
+  /** Sequential BPE in plain Scala over the collected word histogram: each
+    * round merges the most frequent adjacent pair, ties broken by
+    * (left, right) — the reference every trainer case compares against. */
+  private def plainBpe(corpus: org.apache.spark.sql.DataFrame,
+      nMerges: Int): Seq[(Int, String, String, Long)] = {
+    var words: Map[Vector[String], Long] = corpus.select("text").collect()
+      .flatMap(_.getString(0).trim.split("\\s+"))
+      .groupBy(w => w.map(_.toString).toVector)
+      .view.mapValues(_.length.toLong).toMap
+    val merges = Seq.newBuilder[(Int, String, String, Long)]
+    for (rank <- 1 to nMerges) {
       val counts = scala.collection.mutable.Map[(String, String), Long]()
       words.foreach { case (syms, n) =>
         syms.sliding(2).foreach {
@@ -295,27 +302,26 @@ class CurationSpec extends SparkSpec {
       }
       if (counts.nonEmpty) {
         val ((a, b), f) = counts.toSeq.minBy { case ((a, b), f) => (-f, a, b) }
-        expect += ((rank, a, b, f))
-        words = words.groupBy { case (syms, _) =>
-          // left-to-right non-overlapping merge, identical to the fold
-          syms.foldLeft(Vector.empty[String]) { (acc, s) =>
-            if (acc.nonEmpty && acc.last == a && s == b)
-              acc.init :+ (a + b)
-            else acc :+ s
-          }
-        }.view.mapValues(_.values.sum).toMap
+        merges += ((rank, a, b, f))
+        words = words.groupBy { case (syms, _) => applyMerge(syms, a, b) }
+          .view.mapValues(_.values.sum).toMap
       }
     }
-    assert(got == expect.result(), "merge tables diverge")
+    merges.result()
+  }
+
+  test("bpe training equals a plain-Scala reference on the same histogram") {
+    val got = Curation.bpeTrain(docs, 8)
+    assert(got == plainBpe(docs, 8), "merge tables diverge")
     assert(got.size == 8)
     assert(got.forall(_._4 > 0))
   }
 
   test("top-K batched bpe training is bit-identical to sequential, " +
       "for several K and merge counts") {
-    val seq12 = Curation.bpeTrain(docs, 12)
+    val seq12 = plainBpe(docs, 12)
     for (k <- Seq(2, 4, 8)) {
-      val batched = Curation.bpeTrainBatched(docs, 12, batchK = k)
+      val batched = Curation.bpeTrain(docs, 12, batchK = k)
       assert(batched == seq12, s"batchK=$k diverges from sequential")
     }
     // a synthetic corpus engineered with interacting top pairs: 'ab'
@@ -325,8 +331,7 @@ class CurationSpec extends SparkSpec {
       Seq.fill(28)("dede") ++ Seq.fill(5)("xyz"))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    assert(Curation.bpeTrainBatched(tricky, 6, batchK = 4) ==
-      Curation.bpeTrain(tricky, 6))
+    assert(Curation.bpeTrain(tricky, 6, batchK = 4) == plainBpe(tricky, 6))
   }
 
   test("bpe encode applies the trained merges exactly like a sequential " +
@@ -335,16 +340,11 @@ class CurationSpec extends SparkSpec {
     val got = Curation.bpeEncode(docs, merges).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     // reference: left-to-right non-overlapping merge per rank, per word
-    def applyOne(syms: Vector[String], a: String, b: String): Vector[String] =
-      syms.foldLeft(Vector.empty[String]) { (acc, s) =>
-        if (acc.nonEmpty && acc.last == a && s == b) acc.init :+ (a + b)
-        else acc :+ s
-      }
     val expect = docs.collect().map { r =>
       val words = r.getString(1).trim.split("\\s+").toSeq
       val total = words.map { w =>
         merges.sortBy(_._1).foldLeft(w.map(_.toString).toVector) {
-          case (syms, (_, a, b, _)) => applyOne(syms, a, b)
+          case (syms, (_, a, b, _)) => applyMerge(syms, a, b)
         }.size.toLong
       }.sum
       r.getLong(0) -> ((total, words.size.toLong))
@@ -366,11 +366,11 @@ class CurationSpec extends SparkSpec {
     val corpus = (Seq.fill(50)("acq") ++ Seq.fill(50)("bd"))
       .zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
-    val seq3 = Curation.bpeTrain(corpus, 3)
+    val seq3 = plainBpe(corpus, 3)
     assert(seq3.map(m => (m._2, m._3)) ==
       Seq(("a", "c"), ("ac", "q"), ("b", "d")),
       s"sequential ground truth drifted: $seq3")
-    assert(Curation.bpeTrainBatched(corpus, 3, batchK = 2) == seq3)
+    assert(Curation.bpeTrain(corpus, 3, batchK = 2) == seq3)
   }
 
   // ---------------------------------------------------------- d18

@@ -41,8 +41,8 @@ class PlanSpec extends SparkSpec {
   test("nftItems never force-broadcasts the unbounded collections dim " +
       "(J8 scale contract: entity dims are ≤1e9 rows, LAYOUT.md)") {
     import spark.implicits._
-    val items = Seq(("n1", "c1", "1", "0:HOLDER"))
-      .toDF("address", "collection_address", "index", "owner_address")
+    val items = Seq(("n1", "c1", "1", "0:HOLDER", 1L))
+      .toDF("address", "collection_address", "index", "owner_address", "id")
     val collections = Seq(("c1", "0:CO", "{}"))
       .toDF("address", "owner_address", "collection_content")
     val sales = Seq(("0:SALE", false, "0:REAL_S", "n2"))
@@ -55,7 +55,8 @@ class PlanSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val p = graft.operators.QueryLayer
-        .nftItems(items, collections, sales, auctions)
+        .nftItemsByRequest(items, collections, sales, auctions,
+          graft.operators.QueryLayer.NftItemsRequest())
         .queryExecution.executedPlan.toString
       val broadcastJoins =
         p.linesIterator.filter(_.contains("BroadcastHashJoin")).toSeq
@@ -70,6 +71,91 @@ class PlanSpec extends SparkSpec {
   test("top-k compiles to TakeOrderedAndProject, not a global sort") {
     assert(plan(Relational.q21).contains("TakeOrderedAndProject"))
     assert(plan(Relational.q28).contains("TakeOrderedAndProject"))
+    // every paged QueryLayer route, first page and a later one: the
+    // limit+offset must stay one TakeOrderedAndProject of off+lim rows
+    import graft.operators.QueryLayer._
+    val globalSort = """Sort \[.*\], true""".r
+    def topK(name: String, df: org.apache.spark.sql.DataFrame): Unit = {
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("TakeOrderedAndProject") &&
+        p.linesIterator.forall(globalSort.findFirstIn(_).isEmpty),
+        s"$name: a global sort feeds the limit:\n$p")
+    }
+    // one wide parquet frame serves every route's table role (a scan of
+    // unknown size: over a Range the optimizer drops a limit above its
+    // row count)
+    val str = (p: String) => concat(lit(p), (col("id") % 4).cast("string"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-page").toString
+    spark.range(64).select(col("id"),
+      str("0:").as("account"), str("0:").as("address"), str("T").as("hash"),
+      str("T").as("tx_hash"), str("M").as("msg_hash"), str("U").as("trace_id"),
+      str("A").as("action_id"), str("w").as("dns_wallet"), str("d").as("domain"),
+      str("n").as("nft_item_address"), str("0:").as("owner_address"),
+      str("0:").as("admin_address"), str("0:").as("multisig_address"),
+      str("c").as("collection_address"), str("i").as("index"),
+      str("{}").as("collection_content"), str("n").as("nft_address"),
+      str("n").as("nft_addr"), str("0:").as("nft_owner_address"),
+      str("0:").as("nft_owner"), str("0:").as("vesting_sender_address"),
+      str("0:").as("vesting_contract_address"), str("0:").as("wallet_address"),
+      str("0:").as("owner"), str("0:").as("source"), str("0:").as("destination"),
+      str("0:").as("old_owner"), str("0:").as("new_owner"), str("j").as("jetton"),
+      str("w").as("jetton_wallet_address"), str("j").as("jetton_master_address"),
+      str("c").as("nft_collection_address"), str("h").as("code_hash"),
+      str("b").as("data_boc"), lit("in").as("direction"),
+      lit("ton_transfer").as("type"),
+      array().cast("array<string>").as("ancestor_type"),
+      array(str("0:")).as("signers"), array(str("0:")).as("proposers"),
+      (col("id") % 3 === 0).as("is_complete"), (col("id") % 3 === 0).as("end_flag"),
+      lit(false).as("tx_aborted"), lit(0).as("workchain"),
+      col("id").as("lt"), col("id").as("now"), col("id").as("end_lt"),
+      col("id").as("end_utime"), col("id").as("trace_end_lt"),
+      col("id").as("trace_end_utime"), col("id").as("action_end_lt"),
+      col("id").as("action_end_utime"), col("id").as("tx_lt"),
+      col("id").as("tx_now"), col("id").as("created_lt"),
+      col("id").as("created_at"), col("id").as("gen_utime"),
+      col("id").as("seqno"), col("id").as("shard"),
+      col("id").as("mc_block_seqno"), col("id").as("balance"),
+      col("id").as("mintless_amount"), col("id").as("last_transaction_lt"))
+      .write.parquet(s"$dir/t")
+    val t = spark.read.parquet(s"$dir/t")
+    for (off <- Seq(0, 7)) {
+      val acct = Some("0:1")
+      Seq(
+        "transactions" -> transactions(t, TxRequest(account = acct, offset = off)),
+        "tracesByRequest" ->
+          tracesByRequest(t, t, t, TraceRequest(account = acct, offset = off)),
+        "actionsByRequest" ->
+          actionsByRequest(t, t, ActionsRequest(account = acct, offset = off)),
+        "topAccountsByBalance" -> topAccountsByBalance(t, offset = off),
+        "dnsByRequest" -> dnsByRequest(t, Some("w1"), None, offset = off),
+        "multisigByRequest" ->
+          multisigByRequest(t, wallets = Seq("0:1"), offset = off),
+        "vestingByRequest" -> vestingByRequest(t, t, wallets = Seq("0:1"),
+          checkWhitelist = true, offset = off),
+        "nftItemsByRequest" ->
+          nftItemsByRequest(t, t, t, t, NftItemsRequest(offset = off)),
+        "jettonTransfers" ->
+          jettonTransfers(t, TokenEventRequest(owner = Seq("0:1"), offset = off)),
+        "jettonBurns" -> jettonBurns(t, TokenEventRequest(offset = off)),
+        "nftTransfers" -> nftTransfers(t, TokenEventRequest(offset = off)),
+        "jettonWallets" -> jettonWallets(t, t, owners = Seq("0:1"),
+          sortBalanceDesc = Some(true), offset = off),
+        "multisigOrdersByRequest" ->
+          multisigOrdersByRequest(t, multisigs = Seq("0:1"), offset = off)
+      ).foreach { case (name, df) => topK(s"$name offset $off", df) }
+    }
+    // the limit-only routes
+    Seq(
+      "tracesByAccount" -> tracesByAccount(t, t, "0:1"),
+      "actions" -> actions(t, Seq("ton_transfer")),
+      "blocks" -> blocks(t, BlockRequest()),
+      "messages" -> messages(t, MessageRequest()),
+      "accountStates" -> accountStates(t),
+      "walletStates" -> walletStates(t),
+      "masterchainBlockShardState" -> masterchainBlockShardState(t, 7L),
+      "jettonMasters" -> jettonMasters(t),
+      "nftCollections" -> nftCollections(t)
+    ).foreach { case (name, df) => topK(name, df) }
   }
 
   test("semi/anti joins stay semi/anti at the physical level") {

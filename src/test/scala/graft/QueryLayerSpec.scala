@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.QueryLayer
-import graft.operators.QueryLayer.TxRequest
+import graft.operators.QueryLayer.{NftItemsRequest, TxRequest}
 import org.apache.spark.sql.functions._
 
 class QueryLayerSpec extends SparkSpec {
@@ -11,7 +11,13 @@ class QueryLayerSpec extends SparkSpec {
     assert(QueryLayer.clampLimit(-5) == 100)
     assert(QueryLayer.clampLimit(500) == 500)
     assert(QueryLayer.clampLimit(5000) == 1000)
-    assert(QueryLayer.clampOffset(-3) == 0)
+    // a negative offset pages from the start
+    import spark.implicits._
+    val states = (1 to 5).map(i => (s"0:$i", i.toLong)).toDF("account", "balance")
+    def accounts(offset: Int): Seq[String] =
+      QueryLayer.topAccountsByBalance(states, offset = offset)
+        .collect().map(_.getString(0)).toSeq
+    assert(accounts(-3) == accounts(0) && accounts(0).size == 5)
   }
 
   test("O2 sort-key selection follows the filter shape") {
@@ -68,7 +74,7 @@ class QueryLayerSpec extends SparkSpec {
     val states = Seq(("0:A", 50L, "active"), ("0:B", 100L, "active"),
       ("0:C", 100L, "frozen"), ("0:D", 10L, "active"))
       .toDF("account", "balance", "account_status")
-    val got = QueryLayer.topAccounts(states, 3)
+    val got = QueryLayer.topAccountsByBalance(states, 3)
       .collect().map(_.getAs[String]("account")).toSeq
     assert(got == Seq("0:B", "0:C", "0:A")) // balance desc, account tiebreak
   }
@@ -201,11 +207,11 @@ class QueryLayerSpec extends SparkSpec {
   test("nftItems: live sale/auction ownership overrides the holder contract") {
     import spark.implicits._
     val items = Seq(
-      ("n1", "c1", "1", "0:HOLDER"),
-      ("n2", "c1", "2", "0:SALE"),
-      ("n3", "c1", "3", "0:AUCTION"),
-      ("n4", "c1", "4", "0:SALEX")) // held by a sale listing a DIFFERENT nft
-      .toDF("address", "collection_address", "index", "owner_address")
+      ("n1", "c1", "1", "0:HOLDER", 1L),
+      ("n2", "c1", "2", "0:SALE", 2L),
+      ("n3", "c1", "3", "0:AUCTION", 3L),
+      ("n4", "c1", "4", "0:SALEX", 4L)) // held by a sale listing a DIFFERENT nft
+      .toDF("address", "collection_address", "index", "owner_address", "id")
     val collections = Seq(("c1", "0:CO", "{}"))
       .toDF("address", "owner_address", "collection_content")
     val sales = Seq(("0:SALE", false, "0:REAL_S", "n2"),
@@ -213,7 +219,8 @@ class QueryLayerSpec extends SparkSpec {
       .toDF("address", "is_complete", "nft_owner_address", "nft_address")
     val auctions = Seq(("0:AUCTION", false, "0:REAL_A", "n3"))
       .toDF("address", "end_flag", "nft_owner", "nft_addr")
-    val all = QueryLayer.nftItems(items, collections, sales, auctions)
+    val all = QueryLayer.nftItemsByRequest(items, collections, sales, auctions,
+        NftItemsRequest())
       .collect().map(r => r.getAs[String]("address") -> r.getAs[String]("real_owner"))
       .toMap
     assert(all == Map("n1" -> "0:HOLDER", "n2" -> "0:REAL_S",
@@ -221,36 +228,39 @@ class QueryLayerSpec extends SparkSpec {
       // two-key contract (crud_nft.go:61-63): a sale pointing at a
       // DIFFERENT nft lends nothing — the holder contract stays
       "n4" -> "0:SALEX"))
-    val byOwner = QueryLayer.nftItems(items, collections, sales, auctions,
-      owner = Some("0:REAL_S")).collect().map(_.getAs[String]("address"))
+    val byOwner = QueryLayer.nftItemsByRequest(items, collections, sales,
+        auctions, NftItemsRequest(owners = Seq("0:REAL_S"), includeOnSale = true))
+      .collect().map(_.getAs[String]("address"))
     assert(byOwner.toSeq == Seq("n2"))
   }
 
-  test("multisigOrders: pending-only filter and seqno ordering") {
+  test("multisig orders: multisig filter and id ordering") {
     import spark.implicits._
     val orders = Seq(
-      ("o2", "0:MS", "2", false, "3"),
-      ("o1", "0:MS", "1", true, "1"),
-      ("oX", "0:OTHER", "1", false, "0"))
+      ("o2", "0:MS", "2", false, "3", 2L),
+      ("o1", "0:MS", "1", true, "1", 1L),
+      ("oX", "0:OTHER", "1", false, "0", 0L))
       .toDF("address", "multisig_address", "order_seqno",
-        "sent_for_execution", "approvals_mask")
-    val all = QueryLayer.multisigOrders(orders, "0:MS")
+        "sent_for_execution", "approvals_mask", "id")
+    val asc = QueryLayer.multisigOrdersByRequest(orders,
+        multisigs = Seq("0:MS"), descending = false)
       .collect().map(_.getAs[String]("address"))
-    assert(all.toSeq == Seq("o1", "o2"))
-    val pending = QueryLayer.multisigOrders(orders, "0:MS", pendingOnly = true)
+    assert(asc.toSeq == Seq("o1", "o2"))
+    val desc = QueryLayer.multisigOrdersByRequest(orders, multisigs = Seq("0:MS"))
       .collect().map(_.getAs[String]("address"))
-    assert(pending.toSeq == Seq("o2"))
+    assert(desc.toSeq == Seq("o2", "o1")) // the reference's default id DESC
   }
 
   test("vesting whitelist membership is a semi-join (no fan-out dup rows)") {
     import spark.implicits._
-    val contracts = Seq(("v1", "0:OWN1"), ("v2", "0:OWN2"))
-      .toDF("address", "owner_address")
+    val contracts = Seq(("v1", "0:OWN1", "0:S1", 1L), ("v2", "0:OWN2", "0:S2", 2L))
+      .toDF("address", "owner_address", "vesting_sender_address", "id")
     val whitelist = Seq(("v1", "0:W"), ("v1", "0:W2"), ("v2", "0:OTHER"))
       .toDF("vesting_contract_address", "wallet_address")
-    val got = QueryLayer.vestingByWhitelistedWallet(contracts, whitelist, "0:W")
+    val got = QueryLayer.vestingByRequest(contracts, whitelist,
+        wallets = Seq("0:W", "0:W2"), checkWhitelist = true)
       .collect().map(_.getAs[String]("address"))
-    assert(got.toSeq == Seq("v1")) // one row even with 2 whitelist entries
+    assert(got.toSeq == Seq("v1")) // one row even with 2 whitelist matches
   }
 
   test("tokenMetadata: 3-way tagged union left-joined to metadata flags") {

@@ -709,4 +709,19 @@ class RequestFamilies2Spec extends SparkSpec {
     assert(diverged > 0, "fixture length ties too weak to catch an " +
       "order mutation")
   }
+
+  // crud_dns.go:31-40: the route 422s unless exactly one arm is given
+  test("dns request with both wallet and domain fails (the route 422s)") {
+    val e = intercept[IllegalArgumentException] {
+      QueryLayer.dnsByRequest(dnsFixture(), Some("w1"), Some("1a.ton"))
+    }
+    assert(e.getMessage.contains("only one of wallet or domain"))
+  }
+
+  test("dns request with neither wallet nor domain fails (the route 422s)") {
+    val e = intercept[IllegalArgumentException] {
+      QueryLayer.dnsByRequest(dnsFixture(), None, None)
+    }
+    assert(e.getMessage.contains("at least one of wallet or domain"))
+  }
 }

@@ -128,12 +128,14 @@ def d26_tail(bits, cap=1024):
 
 
 def bpe_merges(sf_dir, n_merges):
-    """Plain-Python mirror of Curation.bpeTrain (itself bit-identical to
-    the batched trainer per CurationSpec): word histogram over
-    split(trim(text), '\\s+'), per-round adjacent-pair counts weighted
-    by word frequency, argmax by (freq DESC, left ASC, right ASC), one
-    left-to-right non-overlapping fold per merge. Deterministic; the
-    gate rendering is asserted against the committed d21/d27 SQL."""
+    """Plain-Python sequential BPE, the merge table Curation.bpeTrain
+    must reproduce (its batched rounds are bit-identical to sequential
+    training; CurationSpec checks that against the same algorithm in
+    plain Scala): word histogram over split(trim(text), '\\s+'),
+    per-round adjacent-pair counts weighted by word frequency, argmax by
+    (freq DESC, left ASC, right ASC), one left-to-right non-overlapping
+    fold per merge. Deterministic; the gate rendering is asserted against
+    the committed d21/d27 SQL."""
     import re as _re
     from collections import Counter
     con = duckdb.connect()
